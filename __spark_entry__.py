@@ -8,10 +8,9 @@ value-hash → CORRECTNESS_r{N}.json).
 Probe inventory ↔ SURVEY.md §2.6 Part B + the training-data operators
 (dedup / similarity / text analysis / ingestion / modality / filters).
 Rows-only probes (no oracle entry): q_udf_extract (B17),
-q_approx_distinct (B9), q_multimodal_stub,
-q_decontaminate_hashed — non-SQL-expressible by nature
-(HLL/stub/xxhash64 keys); each has a pytest asserting
-semantics instead. q_lang_id and q_ann_lsh_buckets graduated to
+q_approx_distinct (B9), q_decontaminate_hashed — non-SQL-expressible
+by nature (extraction UDF/HLL/xxhash64 keys); each has a pytest
+asserting semantics instead. q_lang_id and q_ann_lsh_buckets graduated to
 oracle-backed in r3 (table-embedded SQL twin; exact-integer bucketing);
 q_minhash_pairs, q_simhash, and q_simhash_pairs graduated in r4
 (md5int60 + integer-permutation signatures, md5-prefix band keys,
@@ -60,12 +59,6 @@ def _q_udf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("opengraph").alias("n_og"),
         F.size("links").alias("n_links"),
     )
-
-
-def _q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from goose_spark.streaming import stream_window_counts
-
-    return stream_window_counts(spark, sf_dir)
 
 
 def _q_stream_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,7 +181,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # BPE trainer loop (new r4-last): THREE true merge rounds —
         # count pairs -> argmax -> merge everywhere -> recount on the
         # merged vocab; round 2 is mined on round 1's output, which a
-        # single pair-count (q_bpe_merge, rotated to tail) can't express
+        # single pair-count can't express
         "q_bpe_train": T.q_bpe_train,
         # structured-data harvesting (late r4): JSON-LD article
         # metadata (script payload retained via keep_raw_text opt-in,
@@ -251,12 +244,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # plan-tested + L3-conformed; q_equi_join_3way remains the
         # in-window Part-B anchor
         "q_grouped_agg": Q.q_grouped_agg,
-        # rotated late r4 for q_stream_extract: complete-mode window demo,
-        # oracle-green r2; the production append-mode twin stays graded
-        "q_stream_window": _q_stream_window,
-        # rotated late r4 for q_bpe_train (which re-derives this probe's
-        # round-1 argmax as its rank-1 row); still L3-conformed
-        "q_bpe_merge": T.q_bpe_merge,
         # rotated late r4 for q_perceptron_train: an accuracy AUDIT of
         # the minhash sketch rather than an operator; its tracking
         # property is pytest-pinned and L3 re-conforms it every run
@@ -265,10 +252,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # corpus funnel's stage-5 hash gate; full per-row compare still
         # L3-conformed every pytest run
         "q_mix_sample": CO.q_mix_sample,
-        # rotated late r4 for q_kmeans_train: pure seed-centroid
-        # assignment, subsumed by q_ann_ivf_probe (assignment + one
-        # refinement + probe) which stays graded; L3-conformed each run
-        "q_ann_ivf": A.q_ann_ivf,
         # SemDeDup (r5, tail by the window-stability contract):
         # cluster-blocked semantic dedup — seed-centroid assignment +
         # within-cluster cosine pruning; oracle-backed, L3-conformed
@@ -298,7 +281,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # q_warc_extract (meta-charset pages decode inside its chain)
         "q_charset_decode": EN.q_charset_decode,
         # rotated late r4 for substring-clean/crawl-schedule: green r3,
-        # q_bpe_merge anchors tokenizer stats and q_repetition_filter +
+        # q_bpe_train anchors tokenizer stats and q_repetition_filter +
         # q_quality_classifier anchor quality gating in-window
         "q_token_bpeish": T.q_token_bpeish,
         "q_gopher_rules": T.q_gopher_rules,
@@ -325,12 +308,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_scalar_funcs": Q.q_scalar_funcs,
         "q_json": Q.q_json,
         "q_salt_invariance": Q.q_salt_invariance,
-        "q_multimodal_stub": T.q_multimodal_stub,          # rows-only
-        # rotated late r4 (superseded in the window: q_domain_cap_kept
-        # proves the identical keeper set; q_token_bpeish subsumes the
-        # whitespace token count)
-        "q_token_count": T.q_token_count,
-        "q_domain_cap": FL.q_domain_cap,
         "q_fingerprint": T.q_fingerprint,
         "q_url_normalize": T.q_url_normalize,
         "q_quality_score": T.q_quality_score,
@@ -407,7 +384,6 @@ def oracle_sql() -> dict[str, str]:
         "q_salt_invariance": Q.ORACLE_SALT_INVARIANCE,
         "q_grouped_agg": Q.ORACLE_GROUPED_AGG,
         "q_dedup_exact": T.ORACLE_DEDUP_EXACT,
-        "q_token_count": T.ORACLE_TOKEN_COUNT,
         "q_token_bpeish": T.ORACLE_TOKEN_BPEISH,
         "q_quality_score": T.ORACLE_QUALITY_SCORE,
         "q_fingerprint": T.ORACLE_FINGERPRINT,
@@ -429,7 +405,6 @@ def oracle_sql() -> dict[str, str]:
         "q_mojibake_repair": EN.ORACLE_MOJIBAKE_REPAIR,
         "q_soft404": FL.ORACLE_SOFT404,
         "q_gopher_rules": T.ORACLE_GOPHER_RULES,
-        "q_bpe_merge": T.ORACLE_BPE_MERGE,
         "q_jsonld_extract": ST.ORACLE_JSONLD_EXTRACT,
         "q_table_extract": ST.ORACLE_TABLE_EXTRACT,
         "q_pdf_extract": PD.ORACLE_PDF_EXTRACT,
@@ -458,7 +433,6 @@ def oracle_sql() -> dict[str, str]:
         "q_crawl_funnel": RB.ORACLE_CRAWL_FUNNEL,
         "q_pii_redact": FL.ORACLE_PII_REDACT,
         "q_repetition_filter": FL.ORACLE_REPETITION_FILTER,
-        "q_domain_cap": FL.ORACLE_DOMAIN_CAP,
         "q_domain_cap_kept": FL.ORACLE_DOMAIN_CAP_KEPT,
         "q_decontaminate": FL.ORACLE_DECONTAMINATE,
         "q_image_decode": IM.ORACLE_IMAGE_DECODE,
@@ -477,7 +451,6 @@ def oracle_sql() -> dict[str, str]:
     from goose_spark import streaming as S
 
     oracles["q_embed_neardup"] = A.ORACLE_EMBED_NEARDUP
-    oracles["q_ann_ivf"] = A.ORACLE_ANN_IVF
     oracles["q_semdedup"] = A.ORACLE_SEMDEDUP
     from goose_spark import components as CC
 
@@ -502,7 +475,6 @@ def oracle_sql() -> dict[str, str]:
             print(f"WARNING __spark_entry__: {key} oracle degraded to "
                   f"rows-only: {e!r}", file=sys.stderr)
             traceback.print_exc(file=sys.stderr)
-    oracles["q_stream_window"] = S.ORACLE_STREAM_WINDOW
     oracles["q_stream_window_append"] = S.ORACLE_STREAM_WINDOW_APPEND
     oracles["q_stream_sessions"] = S.ORACLE_STREAM_SESSIONS
     oracles["q_stream_dedup"] = S.ORACLE_STREAM_DEDUP

@@ -114,55 +114,6 @@ FROM t a JOIN t b ON a.label = b.label AND a.vec_id < b.vec_id
 N_CENTROIDS = 8  # IVF: deterministic seed centroids = vec_id 0..7
 
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style coarse quantization: assign every vector to its
-    argmax-cosine centroid. Centroids are the embeddings of vec_id <
-    N_CENTROIDS (deterministic seed choice — a real deployment k-means
-    refines them; assignment/probing is the Spark-shaped part).
-
-    Plan shape: tiny centroid side broadcasts into the scan; ranking is a
-    row_number window partitioned by vec_id over 8 candidate rows. The
-    scale path probes one inverted list per query instead of all vectors.
-    """
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    cent = (
-        e.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(F.col("vec_id").alias("centroid_id"), F.col("v").alias("c"))
-    )
-    from pyspark.sql import Window
-
-    cos = _dot(F.col("v"), F.col("c")) / (_norm(F.col("v")) * _norm(F.col("c")))
-    scored = e.join(F.broadcast(cent)).select(
-        "vec_id", "centroid_id", cos.alias("cosine"))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("centroid_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "centroid_id", F.round("cosine", 4).alias("cosine"))
-    )
-
-
-ORACLE_ANN_IVF = f"""
-WITH t AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-     c AS (SELECT vec_id AS centroid_id, v AS cv FROM t WHERE vec_id < {N_CENTROIDS}),
-     scored AS (
-       SELECT t.vec_id, c.centroid_id,
-              list_dot_product(t.v, c.cv)
-                / (sqrt(list_dot_product(t.v, t.v))
-                   * sqrt(list_dot_product(c.cv, c.cv))) AS cosine,
-              ROW_NUMBER() OVER (PARTITION BY t.vec_id
-                                 ORDER BY list_dot_product(t.v, c.cv)
-                                   / (sqrt(list_dot_product(t.v, t.v))
-                                      * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-                                 c.centroid_id) AS rn
-       FROM t, c)
-SELECT vec_id, centroid_id, ROUND(cosine, 4) AS cosine
-FROM scored WHERE rn = 1
-"""
-
-
 # ---- hyperplane LSH: engine-exact bucketing --------------------------------
 # Bucket bits must be identical in Spark and the DuckDB oracle, so the
 # projection is EXACT integer arithmetic carried in doubles: embeddings
@@ -600,7 +551,7 @@ JOIN c{r} cc ON cc.cid = p.cid""")
 # corpus).
 #
 # Scale shape: centroid assignment is a broadcast of K tiny rows + a
-# vec_id-keyed argmax window (identical to q_ann_ivf, oracle-proven);
+# vec_id-keyed argmax window (q_ann_ivf_probe's seed-assignment step);
 # the pair step shuffles once on centroid_id and SemDeDup's K grows
 # with N (paper: K ~ N/10k) so per-cluster membership — and therefore
 # the in-partition pair fan-out — stays bounded at 100 TB; a hot
@@ -611,7 +562,7 @@ SEMDEDUP_TAU = 0.35  # sf0.01: drops 76/500 — non-degenerate either way
 
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup keep/drop decision per vector: seed-centroid assignment
-    (vec_id < N_CENTROIDS, as q_ann_ivf), then within-cluster cosine
+    (vec_id < N_CENTROIDS, as q_ann_ivf_probe), then within-cluster cosine
     pruning against lower-id members at SEMDEDUP_TAU."""
     from pyspark.sql import Window
 

@@ -448,7 +448,7 @@ ORACLE_ANCHOR_TEXT = _oracle_anchor_text()
 # "source prior": document and token volume, exact-duplicate pressure,
 # quality-gate pass rate, language diversity, and size extremes. Whole
 # domains get boosted or cut on this table — it is the aggregation
-# level above q_domain_cap's per-document decisions.
+# level above q_domain_cap_kept's per-document decisions.
 #
 # Scale shape: per-doc features are projections; the duplicate flag
 # joins the 16-byte md5-count aggregate back on its own key (same

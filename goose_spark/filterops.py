@@ -18,11 +18,10 @@ Scale shapes (10^12 rows):
   doc_id; the join of word-stats with bigram-stats is doc_id-keyed and
   co-partitioned by the preceding aggregations.
 - domain cap: ONE shuffle on domain + in-partition sort. Hot domains
-  (a wordpress.com at CC scale) skew this window; the documented
-  mitigation is a pre-cap — per-input-partition top-(CAP) on
-  (domain, quality) before the shuffle drops all but O(CAP × tasks)
-  rows per domain — which AQE's skew-join splitting cannot do for
-  windows, so it is the pipeline's job.
+  (a wordpress.com at CC scale) would skew this window, so a pre-cap —
+  per-input-partition top-(CAP) on (domain, quality) before the shuffle
+  — drops all but O(CAP × tasks) rows per domain; AQE's skew-join
+  splitting cannot do that for windows, so it is the pipeline's job.
 """
 
 from __future__ import annotations
@@ -179,38 +178,6 @@ _DOMAIN_SYNTH_T = "concat('site', CAST(doc_id % 37 AS {S}), '.example')"
 DOMAIN_CAP = 5  # keep the CAP highest-quality docs per domain
 
 
-def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain frequency cap: rank docs within their (synthesized)
-    domain by quality proxy (n_chars desc, doc_id tie-break) and keep the
-    top DOMAIN_CAP. One shuffle on domain; see module docstring for the
-    hot-domain pre-cap at CC scale."""
-    d = load(spark, sf_dir, "documents")
-    dom = F.expr(_DOMAIN_SYNTH_T.format(S="STRING"))
-    win = Window.partitionBy("domain").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id").asc())
-    return (d.select("doc_id", "n_chars", dom.alias("domain"))
-            .withColumn("rnk", F.row_number().over(win))
-            .withColumn("domain_total",
-                        F.count(F.lit(1)).over(Window.partitionBy("domain")))
-            .select("doc_id", "domain", "rnk", "domain_total",
-                    (F.col("rnk") <= DOMAIN_CAP).alias("kept")))
-
-
-ORACLE_DOMAIN_CAP = f"""
-WITH t AS (
-  SELECT doc_id, {_DOMAIN_SYNTH_T.format(S='VARCHAR')} AS domain,
-         ROW_NUMBER() OVER (PARTITION BY {_DOMAIN_SYNTH_T.format(S='VARCHAR')}
-                            ORDER BY n_chars DESC, doc_id) AS rnk,
-         COUNT(*) OVER (PARTITION BY {_DOMAIN_SYNTH_T.format(S='VARCHAR')})
-           AS domain_total
-  FROM documents)
-SELECT doc_id, domain, CAST(rnk AS INTEGER) AS rnk,
-       CAST(domain_total AS BIGINT) AS domain_total,
-       rnk <= {DOMAIN_CAP} AS kept
-FROM t
-"""
-
-
 def precap_domains(df: DataFrame, cap: int,
                    flush_rows: int = 50_000) -> DataFrame:
     """Hot-domain pre-cap (the map-side combiner the module docstring
@@ -265,7 +232,7 @@ def q_domain_cap_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The kept set of the domain cap, computed THROUGH the hot-domain
     pre-cap: precap_domains (zero-shuffle combiner) → one domain-keyed
     window over the bounded survivor set → rnk <= CAP. Same keepers as
-    q_domain_cap's kept=true rows (pytest-asserted with a planted hot
+    a plain window over every row (pytest-asserted with a planted hot
     domain), but the window input is O(CAP × tasks) per domain instead
     of the raw domain frequency — the shape that survives 10^12 rows."""
     d = load(spark, sf_dir, "documents")
@@ -603,8 +570,11 @@ def _oracle_perceptron_train() -> str:
         " t -> length(t) > 7)) AS BIGINT)",
         "CAST(length(text) AS BIGINT)",
     )
+    # MATERIALIZED: every epoch's weights are scalar subqueries over the
+    # previous epoch's CTE, so an inlined CTE re-evaluates the whole
+    # chain once per reference (exponential in PCT_EPOCHS)
     parts = ["""
-f AS (
+f AS MATERIALIZED (
   SELECT {feats},
          CASE WHEN {x2} >= {minw} THEN 1 ELSE -1 END AS y
   FROM documents)""".format(
@@ -618,7 +588,7 @@ f AS (
             f"CAST(SUM(CASE WHEN y * ({dot}) <= 0 THEN y * x{i+1}"
             f" ELSE 0 END) AS BIGINT) AS g{i+1}" for i in range(4))
         parts.append(f"""
-e{ep} AS (
+e{ep} AS MATERIALIZED (
   SELECT {grads},
          CAST(SUM(CASE WHEN y * ({dot}) <= 0 THEN 1 ELSE 0 END) AS BIGINT)
              AS m
@@ -789,9 +759,9 @@ def q_soft404(spark: SparkSession, sf_dir: str) -> DataFrame:
     responses): phrase evidence ("page not found" / "404 error" /
     "no longer available", case-folded contains — no regex dialect to
     disagree on cross-engine) OR a stub-length page (< 20 whitespace
-    tokens, the q_token_count expression both engines already conform
-    on). Pure codegen scan→project, zero shuffles; at crawl scale this
-    runs beside the gopher gate in the same pass. Phrase arms are kept
+    tokens, split on trimmed whitespace — an expression both engines
+    agree on). Pure codegen scan→project, zero shuffles; at crawl scale
+    this runs beside the gopher gate in the same pass. Phrase arms are kept
     live by decorating a deterministic doc_id slice with each phrase —
     the decoration is shared verbatim with the oracle, while the
     CLASSIFIER columns are recomputed independently per engine."""

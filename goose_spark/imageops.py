@@ -1,11 +1,9 @@
-"""Image decode as a Spark operator — the multimodal slot, now with a
-REAL codec.
+"""Image decode as a Spark operator — the multimodal slot, with a REAL
+codec.
 
-Rounds 1–2 shipped `q_multimodal_stub` (binary plumbing real, decode a
-loudly-fake length transform) because no image library exists in this
-container.  Round 3 removes the excuse for PNG: `gooselite.png` is a
-from-scratch 8-bit-grayscale codec (chunk CRCs, zlib inflate, full
-None/Sub/Up/Average/Paeth unfiltering), so the probe now encodes and
+No image library is available, so `gooselite.png` is a from-scratch
+8-bit-grayscale codec (chunk CRCs, zlib inflate, full
+None/Sub/Up/Average/Paeth unfiltering), and the probe encodes and
 DECODES real images inside Arrow batches.
 
 Oracle design (same round-trip idea as q_pdf_extract): pixels are a

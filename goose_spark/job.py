@@ -62,6 +62,16 @@ def apply_malloc_env() -> None:
         os.environ.setdefault(k, v)
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory`` sized to this machine: half of MemTotal
+    from /proc/meminfo (in local mode the driver JVM also runs every
+    task, so a fixed size either starves a small box or overcommits it)."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f
+                        if line.startswith("MemTotal:"))
+    return f"{total_kb // 2048}m"
+
+
 def configure_session(spark: SparkSession) -> None:
     """Session knobs for the extraction stage (idempotent)."""
     spark.conf.set("spark.sql.execution.arrow.maxBytesPerBatch", ARROW_MAX_BYTES)

@@ -38,26 +38,6 @@ FROM documents GROUP BY md5(text)
 
 
 # ------------------------------------------------------------ token count --
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace token count + distinct-token count, all JVM-side."""
-    d = load(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    return d.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-    )
-
-
-ORACLE_TOKEN_COUNT = """
-SELECT doc_id,
-       CAST(len(string_split_regex(trim(text), '\\s+')) AS INT) AS n_tokens,
-       CAST(len(list_distinct(string_split_regex(trim(text), '\\s+'))) AS INT)
-           AS n_distinct_tokens
-FROM documents
-"""
-
-
 # BPE-ish pre-tokenizer: letter runs, digit runs, single non-alnum marks
 # (ASCII classes only — Java regex and DuckDB's RE2 agree on these;
 # unicode classes \p{L} diverge across engines).
@@ -672,33 +652,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", lang_id("text").alias("guessed_lang"))
 
 
-# -------------------------------------------------------- multimodal stub --
-def q_multimodal_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing probe: opaque binary payload column → typed
-    metadata via mapInPandas. The decode step is a clearly-marked
-    deterministic FAKE (no image/audio libs in this container); the
-    Spark-side contract — binary column, Arrow batching, schema — is real.
-    """
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.col("text").cast("binary").alias("payload"))
-
-    def decode_batches(it):
-        for pdf in it:
-            n = pdf["payload"].map(lambda b: len(b) if b is not None else 0)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bytes": n.astype("int64"),
-                # deterministic fake "decoded" dimensions; a real deployment
-                # swaps this for PIL/ffmpeg decode (NotImplemented here)
-                "fake_width": (n % 640).astype("int32"),
-                "fake_height": (n % 480).astype("int32"),
-            })
-
-    return d.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_bytes long, fake_width int, fake_height int")
-
-
 # ------------------------------------------------------ url normalization --
 # Canonicalizing urls before dedup/checkpointing is a first-class
 # CC-pipeline operator: casing, default ports, tracking params, and
@@ -1115,61 +1068,6 @@ GROUP BY lang, pct
 """
 
 
-# ----------------------------------------------------- BPE merge mining --
-# Tokenizer training's inner statistic: one BPE iteration = count
-# adjacent symbol pairs across the word-frequency table and take the
-# argmax as the next merge. This probe computes the first iteration at
-# character level (top-BPE_TOP_K candidate merges); a full trainer
-# loops this exact two-aggregate shape, re-injecting the merged symbol
-# each round, so the probe pins the distributed statistic a 100 TB
-# tokenizer build runs repeatedly.
-BPE_TOP_K = 20
-
-
-def q_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shapes: word-frequency hash aggregate with map-side combine (the
-    only corpus-sized shuffle carries (word, long)); character pairs
-    explode off the tiny vocabulary table; second aggregate over pairs;
-    TakeOrderedAndProject for the top-K. All codegen, exact integers."""
-    from goose_spark.filterops import _WORDS
-
-    d = load(spark, sf_dir, "documents")
-    vocab = (
-        d.select(F.explode(F.expr(_WORDS)).alias("w"))
-        .groupBy("w").agg(F.count(F.lit(1)).alias("freq")))
-    pairs = vocab.select(
-        "freq",
-        F.explode(F.expr(
-            # CASE guard, not greatest(): Spark's sequence(1, 0) yields
-            # DESCENDING [1, 0], not empty (same gotcha _BIGRAMS guards)
-            "CASE WHEN length(w) < 2 THEN array()"
-            " ELSE transform(sequence(1, length(w) - 1),"
-            " i -> substr(w, i, 2)) END")).alias("pair"))
-    return (
-        pairs.groupBy("pair").agg(F.sum("freq").alias("n_pair"))
-        .orderBy(F.desc("n_pair"), "pair").limit(BPE_TOP_K))
-
-
-ORACLE_BPE_MERGE = f"""
-WITH w AS (
-  SELECT u.w, COUNT(*) AS freq
-  FROM (SELECT string_split_regex(lower(trim(text)), '\\s+') AS ws
-        FROM documents) t,
-       unnest(t.ws) AS u(w)
-  GROUP BY u.w),
-p AS (
-  SELECT freq,
-         substr(w, i, 2) AS pair
-  FROM (SELECT w, freq,
-               unnest(generate_series(1, greatest(length(w) - 1, 0))) AS i
-        FROM w) x)
-SELECT pair, CAST(SUM(freq) AS BIGINT) AS n_pair
-FROM p GROUP BY pair
-ORDER BY n_pair DESC, pair
-LIMIT {BPE_TOP_K}
-"""
-
-
 # -------------------------------------------------- exact substring dedup --
 # Span-level exact dedup (the "ExactSubstr" policy from the dedup
 # literature, re-expressed relationally): any K-token window whose text
@@ -1418,10 +1316,10 @@ FROM t LEFT JOIN (
 # ------------------------------------------------------ BPE trainer loop --
 # The real tokenizer-training inner loop, distributed: count adjacent
 # symbol pairs -> take the argmax pair -> merge it everywhere -> recount
-# on the merged vocabulary, BPE_ROUNDS times. q_bpe_merge mines ONE
-# round's statistic; this probe runs the actual iteration, so round 2's
-# winner is computed on a vocabulary where round 1's merge already
-# happened (the part a single pair-count cannot express).
+# on the merged vocabulary, BPE_ROUNDS times. Round 1 is the plain
+# character-pair count; round 2's winner is computed on a vocabulary
+# where round 1's merge already happened (the part a single pair-count
+# cannot express).
 #
 # Symbol-exactness: each learned pair is replaced by ONE private-use
 # character (U+E000+r), so later rounds can never match across a merged

@@ -68,6 +68,9 @@ def write_warc(pages, warc_date: str = "2026-01-01T00:00:00Z",
         status_line = page[2] if len(page) > 2 else "200 OK"
         extra = list(page[3]) if len(page) > 3 else \
             [("Content-Type", "text/html; charset=utf-8")]
+        # the true body length is always appended below; a caller's copy
+        # would emit a second, possibly conflicting, Content-Length
+        extra = [(k, v) for k, v in extra if k.lower() != "content-length"]
         if with_requests:
             req = (f"GET {url} HTTP/1.1\r\nHost: example.com\r\n\r\n").encode()
             records.append(_record_bytes(
@@ -210,15 +213,28 @@ def read_warc(b: bytes) -> List[WarcRecord]:
     return records
 
 
+def _is_start_line(line: bytes) -> bool:
+    """HTTP status line (HTTP/1.1 200 OK) or request line
+    (GET <uri> HTTP/1.1); a header field's name token carries a colon."""
+    parts = line.split(b" ")
+    return parts[0].startswith(b"HTTP/") or (
+        len(parts) == 3 and b":" not in parts[0]
+        and parts[2].startswith(b"HTTP/"))
+
+
 def parse_http_headers(head: Optional[bytes]) -> dict:
-    """Parse a raw HTTP header block (status line + CRLF header lines)
-    into a lowercase-keyed dict. Duplicate field names are joined with
-    ", " per RFC 9110 §5.2 list-combination; malformed lines (no colon)
-    are skipped. Returns {} for None/empty input."""
+    """Parse a raw HTTP header block (optional start line + CRLF header
+    lines) into a lowercase-keyed dict. The first line is skipped only
+    when it is a status or request line. Duplicate field names are
+    joined with ", " per RFC 9110 §5.2 list-combination; malformed lines
+    (no colon) are skipped. Returns {} for None/empty input."""
     out: dict = {}
     if not head:
         return out
-    for line in head.split(_CRLF)[1:]:
+    lines = head.split(_CRLF)
+    if _is_start_line(lines[0]):
+        lines = lines[1:]
+    for line in lines:
         k, sep, v = line.partition(b":")
         if not sep or not k.strip():
             continue

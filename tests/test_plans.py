@@ -139,17 +139,6 @@ def test_repetition_filter_partial_aggs(spark):
     assert "HashAggregate" in plan
 
 
-def test_domain_cap_single_shuffle(spark):
-    from goose_spark import filterops as FL
-
-    plan = _plan(FL.q_domain_cap(spark, SF))
-    tree = plan.split("\n\n")[0]
-    assert "EvalPython" not in plan
-    # both windows share the ONE hashpartitioning(domain) exchange
-    assert tree.count("Exchange") == 1
-    assert "Window" in plan
-
-
 def test_warc_extract_single_python_stage(spark):
     from goose_spark import warcops as W
 

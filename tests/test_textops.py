@@ -113,13 +113,6 @@ def test_ann_lsh_buckets_deterministic(spark):
     assert len(buckets) > 4  # vectors actually spread over buckets
 
 
-def test_multimodal_stub_schema(spark):
-    df = T.q_multimodal_stub(spark, SF)
-    rows = df.limit(5).collect()
-    assert df.columns == ["doc_id", "n_bytes", "fake_width", "fake_height"]
-    assert all(r.n_bytes > 0 for r in rows)
-
-
 def test_simhash_pairs_banding_is_recall_lossless(spark, planted):
     """4×16-bit banding must find EXACTLY the brute-force pairs with
     hamming ≤ HAMMING_MAX (pigeonhole: ≤3 differing bits can touch at
@@ -288,7 +281,7 @@ def test_simhash_hot_bucket_routes_to_star_edges(spark, monkeypatch):
 def test_precap_planted_hot_domain(spark):
     """A planted wordpress.com-sized domain: the pre-cap bounds what
     reaches the window to <= CAP x input-partitions rows for the hot
-    domain, and the final kept set equals q_domain_cap's kept=true rows
+    domain, and the final kept set equals the plain window's top rows
     computed WITHOUT the pre-cap (the combiner never drops a keeper)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F

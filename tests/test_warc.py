@@ -227,3 +227,26 @@ def test_parse_http_headers_edge_cases():
     assert h["x-empty"] == ""
     assert "garbage line without colon" not in str(h)
     assert len(h) == 2
+
+
+def test_parse_http_headers_without_start_line_keeps_first_header():
+    from gooselite.warc import parse_http_headers
+
+    h = parse_http_headers(b"Content-Type: text/html\r\nLocation: /x")
+    assert h == {"content-type": "text/html", "location": "/x"}
+    # a request line is a start line too, never a header
+    req = parse_http_headers(b"GET https://e/ HTTP/1.1\r\nHost: e")
+    assert req == {"host": "e"}
+
+
+def test_write_warc_single_true_content_length():
+    from gooselite.warc import parse_http_headers
+
+    payload = b"<p>body</p>"
+    pages = [("https://e/cl", payload, "200 OK",
+              [("Content-Type", "text/html"), ("content-length", "999")])]
+    rec = next(r for r in read_warc(write_warc(pages, gzip_records=False))
+               if r.rec_type == "response")
+    h = parse_http_headers(rec.http_headers)
+    assert h["content-length"] == str(len(payload))
+    assert rec.payload == payload
