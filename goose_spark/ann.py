@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from goose_spark.components import blocked_pairs
 from goose_spark.queries import load
 
 TOP_K = 10
@@ -24,8 +25,8 @@ def _dot(a, b):
                        F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _norm(a):
-    return F.sqrt(_dot(a, a))
+def _cosine(a, b):
+    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def _query_vector(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -47,7 +48,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != QUERY_VEC_ID)
     emb = F.col("embedding").cast("array<double>")
     qcol = F.array(*[F.lit(x) for x in q])
-    cos = _dot(emb, qcol) / (_norm(emb) * _norm(qcol))
+    cos = _cosine(emb, qcol)
     return (
         e.select("vec_id", F.round(cos, 4).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
@@ -78,26 +79,18 @@ ORDER BY cosine DESC, vec_id LIMIT {TOP_K}
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate scores over within-label pairs.
 
-    The blocking key (`label`; at 100 TB an LSH/IVF bucket) bounds the
-    self-join — never a full cross join. All pair scores are returned so
-    the oracle compares values, not a threshold's boundary behavior.
+    Pairs come from `blocked_pairs` on `label` (at 100 TB an LSH/IVF
+    bucket) with the vector as the exact key of a hot label — never a
+    full cross join. All pair scores are returned so the oracle compares
+    values, not a threshold's boundary behavior.
     """
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v"))
-    a = e.alias("a")
-    b = e.select(F.col("vec_id").alias("vec_id_b"), F.col("label").alias("label_b"),
-                 F.col("v").alias("v_b"))
-    cos = _dot(F.col("v"), F.col("v_b")) / (_norm(F.col("v")) * _norm(F.col("v_b")))
-    return (
-        a.join(b, (F.col("a.label") == F.col("label_b"))
-               & (F.col("a.vec_id") < F.col("vec_id_b")))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("vec_id_b").alias("id_b"),
-            F.col("a.label").alias("label"),
-            # + 0.0 folds IEEE -0.0 from round() to +0.0 (oracle parity)
-            (F.round(cos, 4) + F.lit(0.0)).alias("cosine"),
-        )
+    return blocked_pairs(e, "vec_id", ["label"], ["v"]).select(
+        "id_a", "id_b", "label",
+        # + 0.0 folds IEEE -0.0 from round() to +0.0 (oracle parity)
+        (F.round(_cosine(F.col("v_a"), F.col("v_b")), 4)
+         + F.lit(0.0)).alias("cosine"),
     )
 
 
@@ -185,7 +178,7 @@ def q_ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != QUERY_VEC_ID)
     emb = F.col("embedding").cast("array<double>")
     qcol = F.array(*[F.lit(x) for x in q])
-    cos = _dot(emb, qcol) / (_norm(emb) * _norm(qcol))
+    cos = _cosine(emb, qcol)
     return (
         e.filter(_bucket_expr(emb, len(q), N_PLANES_PROBE) == qbucket)
         .select("vec_id", (F.round(cos, 4) + F.lit(0.0)).alias("cosine"))
@@ -287,7 +280,7 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # 1. assignment to seed centroids
-    cos_seed = _dot(F.col("v"), F.col("c")) / (_norm(F.col("v")) * _norm(F.col("c")))
+    cos_seed = _cosine(F.col("v"), F.col("c"))
     scored = e.join(F.broadcast(cent)).select(
         "vec_id", "v", "centroid_id", F.round(cos_seed, ROUND_C).alias("cos6"))
     w = Window.partitionBy("vec_id").orderBy(F.col("cos6").desc(), "centroid_id")
@@ -309,7 +302,7 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # 3. probe the NPROBE refined lists nearest to the query
-    cos_q_cent = _dot(F.col("c"), qcol) / (_norm(F.col("c")) * _norm(qcol))
+    cos_q_cent = _cosine(F.col("c"), qcol)
     wp = Window.orderBy(F.round(cos_q_cent, ROUND_C).desc(), "centroid_id")
     probed = (
         refined.withColumn("_pr", F.row_number().over(wp))
@@ -318,7 +311,7 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = assign.join(F.broadcast(probed), "centroid_id").filter(
         F.col("vec_id") != QUERY_VEC_ID)
-    cos_final = _dot(F.col("v"), qcol) / (_norm(F.col("v")) * _norm(qcol))
+    cos_final = _cosine(F.col("v"), qcol)
     return (
         cand.select("vec_id",
                     (F.round(cos_final, 4) + F.lit(0.0)).alias("cosine"))
@@ -552,11 +545,11 @@ JOIN c{r} cc ON cc.cid = p.cid""")
 #
 # Scale shape: centroid assignment is a broadcast of K tiny rows + a
 # vec_id-keyed argmax window (q_ann_ivf_probe's seed-assignment step);
-# the pair step shuffles once on centroid_id and SemDeDup's K grows
-# with N (paper: K ~ N/10k) so per-cluster membership — and therefore
-# the in-partition pair fan-out — stays bounded at 100 TB; a hot
-# cluster would be capped the same way q_simhash_pairs guards hot
-# buckets. The kept flag rejoins on vec_id (8-byte key, AQE-splittable).
+# the pair step is `blocked_pairs` on centroid_id with the vector as the
+# exact key. SemDeDup's K grows with N (paper: K ~ N/10k), so clusters
+# stay small; a collapsed cluster over HOT_BUCKET_CAP members keeps only
+# the star edges between identical vectors, linear instead of quadratic.
+# The kept flag rejoins on vec_id (8-byte key, AQE-splittable).
 SEMDEDUP_TAU = 0.35  # sf0.01: drops 76/500 — non-degenerate either way
 
 
@@ -572,7 +565,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") < N_CENTROIDS)
         .select(F.col("vec_id").alias("centroid_id"), F.col("v").alias("c"))
     )
-    cos_c = _dot(F.col("v"), F.col("c")) / (_norm(F.col("v")) * _norm(F.col("c")))
+    cos_c = _cosine(F.col("v"), F.col("c"))
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cosine").desc(), F.col("centroid_id"))
     asg = (
@@ -582,16 +575,10 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .select("vec_id", "v", "centroid_id")
     )
-    lo = asg.select(F.col("vec_id").alias("id_lo"),
-                    F.col("centroid_id").alias("cid_lo"),
-                    F.col("v").alias("v_lo"))
-    pair_cos = _dot(F.col("v_lo"), F.col("v")) / (
-        _norm(F.col("v_lo")) * _norm(F.col("v")))
     dropped = (
-        asg.join(lo, (F.col("cid_lo") == F.col("centroid_id"))
-                 & (F.col("id_lo") < F.col("vec_id")))
-        .filter(pair_cos >= SEMDEDUP_TAU)
-        .select("vec_id").distinct()
+        blocked_pairs(asg, "vec_id", ["centroid_id"], ["v"])
+        .filter(_cosine(F.col("v_a"), F.col("v_b")) >= SEMDEDUP_TAU)
+        .select(F.col("id_b").alias("vec_id")).distinct()
     )
     return (
         asg.join(dropped.withColumn("_d", F.lit(1)), "vec_id", "left")

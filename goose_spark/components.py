@@ -1,12 +1,19 @@
-"""Near-duplicate keeper resolution: connected components over verified
-near-dup pairs (SURVEY.md §2.7; VERDICT r2 "What's missing" #3).
+"""Near-duplicate pair generation and keeper resolution (SURVEY.md §2.7).
 
-The dedup operators (`q_minhash_pairs`, `q_simhash_pairs`,
-`q_embed_neardup`, `q_ngram_jaccard`) emit candidate PAIRS; an actual
-dedup pipeline must resolve pairs into groups and pick one keeper per
-group — transitively: if A~B and B~C, then {A,B,C} is one group even when
-A~C was never scored. That is connected components with the min-id member
-as the group keeper.
+`blocked_pairs` is the one pair primitive behind every near-dup operator
+(`q_minhash_pairs`, `q_minhash_est_vs_exact`, `q_simhash_pairs`,
+`q_ngram_jaccard`, `q_embed_neardup`, `q_semdedup`): the candidate pairs
+inside each blocking key, with ONE hot-block policy. Blocks of at most
+HOT_BUCKET_CAP members emit all in-block pairs; larger blocks emit only
+star edges (group-min → member) between members equal on the caller's
+exact key, so one template-heavy band or collapsed cluster stays linear
+instead of quadratic. A star is component-equivalent to the clique for
+the keeper resolution below.
+
+An actual dedup pipeline must resolve pairs into groups and pick one
+keeper per group — transitively: if A~B and B~C, then {A,B,C} is one
+group even when A~C was never scored. That is connected components with
+the min-id member as the group keeper.
 
 Algorithm: iterative min-label propagation. labels start as each node's
 own id; each round every node takes the min of its own label and its
@@ -29,14 +36,63 @@ old-vs-new join. (decimal(38,0): an int64 sum could overflow at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+# Blocks with more members than this emit star edges, not all pairs.
+HOT_BUCKET_CAP = 1000
 
 # Edge threshold for q_dedup_groups: cosine >= 0.25 over within-label
 # pairs yields a graph with real transitive chains on the synthetic
 # embeddings (sf0.01: 293 edges, 59 multi-node components, sizes 2..24)
 # while keeping the oracle's reachability closure small.
 NEARDUP_CC_THRESHOLD = 0.25
+
+
+def blocked_pairs(df: DataFrame, id_col: str, block_cols: list[str],
+                  exact_cols: list[str]) -> DataFrame:
+    """Unordered pairs (id_a < id_b) of rows sharing every `block_cols`
+    value. Returns id_a, id_b, the block columns, and `<c>_a`/`<c>_b` for
+    each of `exact_cols`. A row may sit in several blocks (one row per
+    band), so callers dedupe pairs across blocks themselves.
+
+    Blocks of at most HOT_BUCKET_CAP members emit all their pairs. Larger
+    blocks emit only star edges from the min id of each exact-key group
+    to its other members: linear, and component-equivalent to the clique.
+    Two hot-block members with different exact keys lose their pair.
+
+    Plan: a count window over the block and a min-id window over block +
+    exact key share one shuffle on the block columns; the groupBy keeps
+    that partitioning. Cold blocks collect into one bounded array, hot
+    rows stay one row per group, so no giant array is ever built. One
+    explode emits either the cold block's all-pairs array or the hot
+    row's star edge; the payload columns never join back.
+    """
+    hot_id = F.when(F.col("_n") > HOT_BUCKET_CAP, F.col(id_col))
+    grouped = (
+        df.select(id_col, *block_cols, *exact_cols)
+        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(*block_cols)))
+        .filter(F.col("_n") > 1)
+        .withColumn("_min", F.min(id_col).over(
+            Window.partitionBy(*block_cols, *exact_cols)))
+        .groupBy(*block_cols, hot_id.alias("_hot_id"))
+        .agg(F.collect_list(F.struct(
+            F.col(id_col).alias("id"), F.col("_min").alias("min_id"),
+            *exact_cols)).alias("_ms")))
+
+    def edge(a: str, b: str, ida: str) -> str:
+        return f"struct({ida} as id_a, {b}.id as id_b" + "".join(
+            f", {a}.{c} as {c}_a, {b}.{c} as {c}_b" for c in exact_cols) + ")"
+
+    pairs = ("flatten(transform(_ms, a -> filter(transform(_ms, b -> "
+             f"{edge('a', 'b', 'a.id')}), p -> p.id_a < p.id_b)))")
+    star = (f"filter(transform(_ms, x -> {edge('x', 'x', 'x.min_id')}),"
+            " p -> p.id_a != p.id_b)")
+    return grouped.select(
+        *block_cols,
+        F.explode(F.expr(f"if(_hot_id is null, {pairs}, {star})")).alias("_e"),
+    ).select("_e.id_a", "_e.id_b", *block_cols,
+             *[f"_e.{c}_{s}" for c in exact_cols for s in "ab"])
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,

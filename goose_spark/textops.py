@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from goose_spark.components import blocked_pairs
 from goose_spark.queries import load
 
 # ------------------------------------------------------------ exact dedup --
@@ -177,8 +178,10 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Banded LSH candidate generation over (doc_id, sig): explode the 8
-    md5-prefix band keys, self-join on (band_id, band_hash), dedupe to
-    distinct ordered (id_a, id_b). Only ~24-byte rows ever shuffle."""
+    md5-prefix band keys, pair docs inside each (band_id, band_hash)
+    block with `blocked_pairs`, dedupe to distinct (id_a, id_b). The
+    exact key of a hot band is a 60-bit md5 of the whole signature, so
+    band rows stay ~32 bytes and never carry the signature itself."""
     rows_per_band = N_PERM // LSH_BANDS
     # sig is let-bound (single-element-array transform) for the same
     # reason as in minhash_signatures: 32 bare sig[i] references across
@@ -193,30 +196,24 @@ def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
                     for r in range(rows_per_band))
         + ")), 1, 16) as band_hash)"
         for b in range(LSH_BANDS))
-    bands = sigs.select(
-        "doc_id",
+    sig_md5 = _MD5INT60_SPARK.format(x="concat_ws(',', cast(sig as array<string>))")
+    bands = sigs.withColumn("sig_md5", F.expr(sig_md5)).select(
+        "doc_id", "sig_md5",
         F.explode(F.expr(
             f"transform(array(sig), g -> array({band_structs}))")[0]
         ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_hash")
-
-    left = bands.alias("a")
-    right = bands.select(F.col("doc_id").alias("doc_id_b"), "band_id", "band_hash")
-    return (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("doc_id") < F.col("doc_id_b"))
-        .select(F.col("doc_id").alias("id_a"), F.col("doc_id_b").alias("id_b"))
-        .distinct()
-    )
+    ).select("doc_id", "sig_md5", "band.band_id", "band.band_hash")
+    return (blocked_pairs(bands, "doc_id", ["band_id", "band_hash"], ["sig_md5"])
+            .select("id_a", "id_b").distinct())
 
 
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs with exact-Jaccard
     verification (shingle arrays, array_intersect/union) — no Python UDFs.
 
-    Shuffle discipline (the 100 TB path): the band explode and pair
-    self-join carry only (doc_id, band_hash) — a 16-char hex-prefix
-    string key in probe mode (~24 B/row; deploy swaps it for xxhash64's
+    Shuffle discipline (the 100 TB path): the band explode and in-block
+    pairing carry only (doc_id, band_hash, sig_md5) — a 16-char hex-prefix
+    string key in probe mode (~32 B/row; deploy swaps it for xxhash64's
     8-byte long, same plan shape), never the shingle arrays; shingles
     join back in ONLY for the (rare) candidate pairs that survive
     banding, so the wide data rides one narrow broadcast-sized join
@@ -355,28 +352,21 @@ FROM e
 # ------------------------------------------------------- n-gram Jaccard ----
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard over within-source pairs — the brute-force
-    ground truth that MinHash+LSH approximates. Pairs are bounded by the
-    `source` key (at 100 TB: a blocking key or an LSH bucket, never a full
-    cross join); the 20-source dim side broadcasts.
+    ground truth that MinHash+LSH approximates. Pairs come from
+    `blocked_pairs` on `source` (at 100 TB: a blocking key or an LSH
+    bucket, never a full cross join), with the distinct shingle array as
+    the exact key of a hot source.
     """
     d = (
         load(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
         .select("doc_id", "source", F.array_distinct(_shingles()).alias("sh"))
     )
-    a = d.alias("a")
-    b = d.select(F.col("doc_id").alias("doc_id_b"), F.col("source").alias("source_b"),
-                 F.col("sh").alias("sh_b")).alias("b")
-    return (
-        a.join(b, (F.col("a.source") == F.col("source_b"))
-               & (F.col("a.doc_id") < F.col("doc_id_b")))
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("doc_id_b").alias("id_b"),
-            F.round(
-                F.size(F.array_intersect("sh", "sh_b")).cast("double")
-                / F.size(F.array_union("sh", "sh_b")), 4).alias("jaccard"),
-        )
+    return blocked_pairs(d, "doc_id", ["source"], ["sh"]).select(
+        "id_a", "id_b",
+        F.round(
+            F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+            / F.size(F.array_union("sh_a", "sh_b")), 4).alias("jaccard"),
     )
 
 
@@ -477,109 +467,40 @@ FROM documents d LEFT JOIN sims USING (doc_id)
 
 SIMHASH_BANDS = 4   # 4 × 16-bit bands: hamming ≤ 3 ⇒ ≥ 1 band identical
 HAMMING_MAX = 3     # (pigeonhole) — banding loses NO pair under the gate
-HOT_BUCKET_CAP = 1000  # band buckets above this route to the exact path
 
 
 def simhash_pairs(docs: DataFrame) -> DataFrame:
     """SimHash near-duplicate pairs at scale: band each 64-bit fingerprint
-    into 4 × 16-bit keys, group by (band_id, band_value), generate pairs
-    INSIDE each band bucket, then verify hamming(sim_a, sim_b) ≤
+    into 4 × 16-bit keys, pair docs inside each (band_id, band_val) block
+    with `blocked_pairs`, then verify hamming(simhash_a, simhash_b) ≤
     HAMMING_MAX with JVM-side bit_count(xor). By pigeonhole, a pair
     within the hamming gate shares at least one of the 4 bands, so
-    banding is recall-lossless for the gate.
+    banding is recall-lossless for the gate — up to the hot-block policy:
+    a band block over HOT_BUCKET_CAP members (e.g. millions of empty docs
+    fingerprinting to 0) keeps only the star edges between identical
+    fingerprints (hamming 0), so two hot-block docs with different
+    fingerprints lose their pair.
 
-    Plan shape (the 100 TB discipline): the expensive fingerprint UDF
-    runs in ONE pass (a band self-JOIN would re-evaluate it per side —
-    Spark does not reuse the unaliased subplan); everything after it
-    carries only (doc_id, 8-byte fingerprint, 2-byte band key) through a
-    single groupBy shuffle.
-
-    Hot-bucket guard (VERDICT r2 item 7): a pathological bucket (e.g.
-    millions of empty docs fingerprinting to 0) would make both the
-    collect_list array and the quadratic pair expansion a straggler.
-    Bucket sizes are counted FIRST (a 10-byte-row aggregate); buckets
-    over HOT_BUCKET_CAP members never reach collect_list — their members
-    are routed through the exact path: grouped by FULL fingerprint and
-    emitted as star edges (group-min ↔ member, hamming 0). A star is
-    component-equivalent to the clique for downstream keeper resolution
-    (goose_spark.components), and linear, not quadratic. Trade-off: two
-    hot-bucket docs with non-identical fingerprints lose their pair —
-    exactly the "route to exact dedup first" mitigation, now enforced in
-    the plan instead of documented."""
+    Plan shape: the fingerprint UDF runs in ONE pass (a band self-join
+    would re-evaluate it per side); after it only (doc_id, 8-byte
+    fingerprint, 2-byte band key) rows shuffle. A pair that shares
+    several bands surfaces once per band; the final groupBy dedupes it."""
     simhash64 = pandas_udf(_simhash_kernel, "long")
-    sigs = docs.select("doc_id", simhash64("text").alias("simhash"))
-    bands = sigs.select(
-        F.struct("doc_id", "simhash").alias("m"),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.shiftrightunsigned(F.col("simhash"), 16 * b)
-                .bitwiseAND(F.lit(0xFFFF)).alias("band_val"),
-            )
+    bands = docs.select(
+        "doc_id", simhash64("text").alias("simhash"),
+    ).select(
+        "doc_id", "simhash",
+        F.posexplode(F.array(*[
+            F.shiftrightunsigned(F.col("simhash"), 16 * b)
+            .bitwiseAND(F.lit(0xFFFF))
             for b in range(SIMHASH_BANDS)
-        ])).alias("band"),
-    ).select("m", "band.band_id", "band.band_val")
-    # ONE linear pipeline — no cold/hot plan branches. Branching two
-    # consumers off the UDF subtree duplicates it in the physical plan
-    # (measured: 2× ArrowEvalPython, no static ReusedExchange), i.e. the
-    # fingerprint would run twice. Instead:
-    #   1. window over (band_id, band_val): bucket_n;
-    #   2. window over (band_id, band_val, simhash): min_id — the star
-    #      anchor for hot buckets;
-    #   3. groupBy (band_id, band_val, subkey) where subkey = -1 for
-    #      cold rows and doc_id for hot rows: cold buckets aggregate
-    #      their ≤ HOT_BUCKET_CAP members into one array, HOT rows stay
-    #      ONE ROW PER GROUP — no giant collect_list array ever exists;
-    #   4. one projection emits either the all-pairs array (cold, array
-    #      expression bounded by the cap) or the single star edge (hot).
-    # Three narrow shuffles of ~20-byte rows replace the old single
-    # shuffle — the price of the guard; the wide text never shuffles.
-    wb = Window.partitionBy("band_id", "band_val")
-    ws = Window.partitionBy("band_id", "band_val", "simhash")
-    tagged = (
-        bands.select("band_id", "band_val",
-                     F.col("m.doc_id").alias("doc_id"),
-                     F.col("m.simhash").alias("simhash"))
-        .withColumn("min_id", F.min("doc_id").over(ws))
-        .withColumn("bucket_n", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bucket_n") > 1)
+        ])).alias("band_id", "band_val"),
     )
-    hot = F.col("bucket_n") > HOT_BUCKET_CAP
-    grouped = (
-        tagged.groupBy("band_id", "band_val",
-                       F.when(hot, F.col("doc_id")).otherwise(F.lit(-1))
-                       .alias("subkey"))
-        .agg(F.collect_list(F.struct("doc_id", "simhash", "min_id")).alias("ms"),
-             F.first("bucket_n").alias("bucket_n"))
-    )
-    # cold: all unordered pairs from the bounded member array; hot: the
-    # group is a single member — its star edge (min_id ↔ doc_id),
-    # dropped when the member IS the anchor. sim_* = null marks a star
-    # edge (hamming 0 by construction: identical fingerprints).
-    pair_struct = (
-        "flatten(transform(ms, a -> "
-        " filter(transform(ms, b -> struct(a.doc_id as id_a, b.doc_id as id_b,"
-        "                                  a.simhash as sim_a, b.simhash as sim_b)),"
-        "        p -> p.id_a < p.id_b)))"
-    )
-    star_struct = (
-        "filter(transform(ms, x -> struct(x.min_id as id_a, x.doc_id as id_b,"
-        "                                 cast(null as long) as sim_a,"
-        "                                 cast(null as long) as sim_b)),"
-        "       p -> p.id_a != p.id_b)"
-    )
-    edges = grouped.select(F.explode(F.expr(
-        f"case when bucket_n <= {HOT_BUCKET_CAP} then {pair_struct} "
-        f"else {star_struct} end")).alias("e")).select("e.*")
-    hamming = (
-        F.when(F.col("sim_a").isNull(), F.lit(0))
-        .otherwise(F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
-        .cast("int")
-    )
-    # a pair can surface from a cold bucket of one band and a hot bucket
-    # of another: min-merge dedupes across bands AND across paths
+    hamming = F.bit_count(
+        F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int")
     return (
-        edges.withColumn("hamming", hamming)
+        blocked_pairs(bands, "doc_id", ["band_id", "band_val"], ["simhash"])
+        .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= HAMMING_MAX)
         .groupBy("id_a", "id_b").agg(F.min("hamming").alias("hamming"))
     )
@@ -588,11 +509,11 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded SimHash near-dup pairs over documents. Oracle-backed since
     r4: banding is recall-lossless for the hamming ≤ HAMMING_MAX gate
-    (pigeonhole over 4 × 16-bit bands), and at probe SF no bucket
+    (pigeonhole over 4 × 16-bit bands), and at probe SF no band block
     exceeds HOT_BUCKET_CAP, so the emitted set is EXACTLY the hamming-
     gated pair set — which the DuckDB twin recomputes brute-force from
-    the (now engine-exact) simhash fingerprints. The hot-bucket star
-    routing stays pytest-covered (planted hot bucket)."""
+    the (now engine-exact) simhash fingerprints. The hot-block star
+    routing is pytest-covered (planted hot block)."""
     return simhash_pairs(load(spark, sf_dir, "documents"))
 
 

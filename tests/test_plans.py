@@ -76,15 +76,35 @@ def test_whole_stage_codegen_in_scan_filter(spark):
     assert "* Filter" in tree and "* Project" in tree
 
 
-def test_simhash_pairs_single_udf_pass(spark):
-    """The fingerprint UDF must run in ONE pass (a band self-join would
-    re-evaluate it per side); pair generation is in-bucket, JVM-side."""
+def test_neardup_pairs_come_from_block_arrays(spark):
+    """The five near-dup probes get their pairs from the in-block array
+    expansion of `blocked_pairs` (one explode over the collected block),
+    never from a self-join on the blocking key. SimHash's fingerprint UDF
+    runs in ONE pass (a band self-join would re-evaluate it per side)."""
+    from goose_spark import ann as A
     from goose_spark import textops as T
 
-    plan = _plan(T.q_simhash_pairs(spark, SF))
-    tree = plan.split("\n\n")[0]
-    assert tree.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in plan
+    probes = {
+        T.q_minhash_pairs: ("band_id", "band_hash"),
+        T.q_simhash_pairs: ("band_id", "band_val"),
+        T.q_ngram_jaccard: ("source",),
+        A.q_embed_neardup: ("label",),
+        A.q_semdedup: ("centroid_id",),
+    }
+    for probe, block_cols in probes.items():
+        plan = _plan(probe(spark, SF))
+        generates = [ln for ln in plan.splitlines()
+                     if ln.startswith("Arguments: explode(")]
+        assert any("_hot_id" in ln for ln in generates), probe.__name__
+        join_keys = [ln for ln in plan.splitlines()
+                     if ln.startswith(("Left keys", "Right keys",
+                                       "Join condition"))]
+        for c in block_cols:
+            assert not any(f"{c}#" in ln for ln in join_keys), (
+                probe.__name__, c)
+        if probe is T.q_simhash_pairs:
+            assert plan.split("\n\n")[0].count("ArrowEvalPython") == 1
+            assert "BatchEvalPython" not in plan
 
 
 def test_ann_lsh_probe_is_pure_expressions(spark):

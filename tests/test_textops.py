@@ -246,34 +246,102 @@ def test_dedup_groups_covers_every_vector(spark):
     assert (grp.index == grp.values).all()
 
 
-def test_simhash_hot_bucket_routes_to_star_edges(spark, monkeypatch):
-    """VERDICT r2 item 7: a pathological all-identical corpus must not
-    build a quadratic pair expansion (or a giant collect_list array) —
-    buckets over HOT_BUCKET_CAP emit linear star edges keyed by the full
-    fingerprint, component-equivalent to the clique for keeper
-    resolution."""
-    import pandas as pd
+def test_blocked_pairs_hot_block_routes_to_star_edges(spark, monkeypatch):
+    """Blocks over HOT_BUCKET_CAP must not build a quadratic pair
+    expansion (or a giant collect_list array): they emit linear star
+    edges per exact key, component-equivalent to the clique for keeper
+    resolution. Blocks within the cap emit every pair."""
+    from goose_spark import components as C
 
-    monkeypatch.setattr(T, "HOT_BUCKET_CAP", 3)
+    monkeypatch.setattr(C, "HOT_BUCKET_CAP", 3)
     n = 60
-    pdf = pd.DataFrame({
-        "doc_id": range(n),
-        "text": ["the same identical document text for every row here"] * n,
-    })
-    out = T.simhash_pairs(spark.createDataFrame(pdf)).toPandas()
-    # linear, not quadratic: n-1 star edges, all anchored at doc 0
-    assert len(out) == n - 1
-    assert set(out.id_a) == {0}
-    assert set(out.id_b) == set(range(1, n))
-    assert (out.hamming == 0).all()
+    rows = ([(i, "hot", "x") for i in range(n)]
+            + [(100 + i, "hot", "y") for i in range(5)]
+            + [(200, "cold", "p"), (201, "cold", "q"), (202, "cold", "r"),
+               (300, "single", "s")])
+    df = spark.createDataFrame(rows, "id long, blk string, key string")
+    out = C.blocked_pairs(df, "id", ["blk"], ["key"]).toPandas()
+    assert list(out.columns) == ["id_a", "id_b", "blk", "key_a", "key_b"]
+    assert len(out) == len(set(zip(out.id_a, out.id_b)))
+    got = {(r.id_a, r.id_b): (r.blk, r.key_a, r.key_b)
+           for r in out.itertuples()}
+    want = {(0, i): ("hot", "x", "x") for i in range(1, n)}
+    want |= {(100, 100 + i): ("hot", "y", "y") for i in range(1, 5)}
+    want |= {(200, 201): ("cold", "p", "q"), (200, 202): ("cold", "p", "r"),
+             (201, 202): ("cold", "q", "r")}
+    assert got == want
     # downstream keeper resolution sees ONE component
-    from goose_spark.components import connected_components
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     edges = spark.createDataFrame(
-        out.rename(columns={"id_a": "src", "id_b": "dst"})[["src", "dst"]])
-    got = {r["id"]: r["keeper_id"]
-           for r in connected_components(nodes, edges).collect()}
-    assert got == {i: 0 for i in range(n)}
+        [(a, b) for a, b in got if a < n], "src long, dst long")
+    keepers = {r["id"]: r["keeper_id"]
+               for r in C.connected_components(nodes, edges).collect()}
+    assert keepers == {i: 0 for i in range(n)}
+    # SimHash's band blocks follow the same policy: n - 1 hamming-0 edges
+    docs = spark.createDataFrame(
+        [(i, "the same identical document text for every row here")
+         for i in range(n)], "doc_id long, text string")
+    sim = T.simhash_pairs(docs).toPandas()
+    assert len(sim) == n - 1 and set(sim.id_a) == {0}
+    assert (sim.hamming == 0).all()
+
+
+def test_minhash_hot_band_is_linear(spark, monkeypatch):
+    """60 identical docs share all 8 LSH band blocks. Over the cap they
+    yield the n - 1 star edges, not the n(n-1)/2 clique."""
+    from goose_spark import components as C
+
+    monkeypatch.setattr(C, "HOT_BUCKET_CAP", 3)
+    n = 60
+    docs = spark.createDataFrame(
+        [(i, "the same identical document text for every row here")
+         for i in range(n)], "doc_id long, text string")
+    pairs = T._lsh_candidate_pairs(T.minhash_signatures(docs)).toPandas()
+    assert len(pairs) == n - 1
+    assert set(pairs.id_a) == {0} and set(pairs.id_b) == set(range(1, n))
+
+
+def test_semdedup_hot_cluster_is_linear(spark, monkeypatch, tmp_path):
+    """A collapsed cluster of 60 identical vectors: over the cap the pair
+    step emits n - 1 star edges instead of the clique, and every
+    keep/drop decision is the same as with the cap out of reach."""
+    import numpy as np
+
+    from goose_spark import ann as A
+    from goose_spark import components as C
+
+    dim, n = 16, 60
+    eye = np.eye(dim)
+    planted = 0.3 * eye[0] + eye[8]  # cosine 0.29 < tau to centroid 0
+    vecs = ([eye[i] for i in range(A.N_CENTROIDS)]
+            + [planted / np.linalg.norm(planted)] * n
+            + [eye[1] + 0.1 * eye[9]])  # a cold near-dup of centroid 1
+    pd.DataFrame({
+        "vec_id": range(len(vecs)),
+        "embedding": [v.astype("float32").tolist() for v in vecs],
+        "label": [0] * len(vecs),
+    }).to_parquet(tmp_path / "embeddings.parquet")
+
+    def run(cap):
+        monkeypatch.setattr(C, "HOT_BUCKET_CAP", cap)
+        edges = []
+
+        def spy(*args):
+            edges.append(C.blocked_pairs(*args))
+            return edges[-1]
+
+        monkeypatch.setattr(A, "blocked_pairs", spy)
+        kept = {r.vec_id: r.kept
+                for r in A.q_semdedup(spark, str(tmp_path)).collect()}
+        return kept, edges[0].count()
+
+    cold, cold_edges = run(1000)
+    hot, hot_edges = run(3)
+    assert cold == hot
+    # kept: the centroids and the planted group's min id
+    assert {v for v, k in hot.items() if k} == set(range(A.N_CENTROIDS + 1))
+    assert cold_edges == (n + 1) * n // 2 + 1
+    assert hot_edges == (n - 1) + 1
 
 
 # --- Hot-domain pre-cap (r4) ---------------------------------------------
@@ -383,22 +451,37 @@ def test_simhash_oracle_corpus_assumptions():
         assert all(ord(c) <= 126 for c in t), "non-ASCII character"
 
 
-def test_simhash_pairs_no_hot_bucket_at_grading_sf():
-    """ORACLE_SIMHASH_PAIRS equals the banded Spark plan only while no
-    (band_id, band_val) bucket exceeds HOT_BUCKET_CAP (hot buckets route
-    to star edges, the brute-force twin emits the clique). Pin the
-    margin on the grading corpus."""
+def test_no_hot_block_at_grading_sf():
+    """The near-dup oracles emit every in-block pair, so they equal the
+    Spark plans only while no block exceeds HOT_BUCKET_CAP (hot blocks
+    emit star edges). Pin the margin for every block key on the grading
+    corpus: SimHash and MinHash bands, sources, labels, clusters."""
     from collections import Counter
 
-    import pandas as pd
+    import duckdb
 
-    from goose_spark.textops import HOT_BUCKET_CAP, SIMHASH_BANDS, _simhash_kernel
+    from goose_spark import ann as A
+    from goose_spark.components import HOT_BUCKET_CAP
+    from goose_spark.ducklab import duck_views
 
-    sims = _simhash_kernel(pd.Series(_grading_texts()))
-    counts = Counter(
-        (b, (int(s) >> (16 * b)) & 0xFFFF)
-        for s in sims for b in range(SIMHASH_BANDS))
-    assert max(counts.values()) < HOT_BUCKET_CAP
+    sims = T._simhash_kernel(pd.Series(_grading_texts()))
+    con = duck_views(duckdb.connect())
+
+    def largest(sql, key):
+        return con.execute(f"SELECT max(n) FROM (SELECT count(*) AS n"
+                           f" FROM ({sql}) GROUP BY {key})").fetchone()[0]
+
+    sizes = {
+        "simhash band": max(Counter(
+            (b, (int(s) >> (16 * b)) & 0xFFFF)
+            for s in sims for b in range(T.SIMHASH_BANDS)).values()),
+        "minhash band": largest(T._oracle_minhash_cte() + " SELECT * FROM bands",
+                                "band_id, band_hash"),
+        "source": largest("SELECT * FROM documents", "source"),
+        "label": largest("SELECT * FROM embeddings", "label"),
+        "cluster": largest(A.ORACLE_SEMDEDUP, "centroid_id"),
+    }
+    assert max(sizes.values()) <= HOT_BUCKET_CAP, sizes
 
 
 def test_precap_keeps_null_domains(spark):
