@@ -48,14 +48,13 @@ spark = (SparkSession.builder.master(f"local[{{cpus}}]")
          .config("spark.ui.enabled", "false")
          .config("spark.driver.memory", J.driver_memory())
          .getOrCreate())
-J.configure_session(spark)
 
 pages_path = {pages_path!r}
 # warmup: touch the input + spin up python workers on a tiny slice
 J.extract(J.prepare(J.read_pages(spark, pages_path).limit(64)), partitions=cpus).count()
 
 t0 = time.perf_counter()
-out = J.extract(J.prepare(J.read_pages(spark, pages_path)), partitions=cpus * 4)
+out = J.extract(J.prepare(J.read_pages(spark, pages_path)))
 row = out.agg(F.count(F.lit(1)).alias("docs"), F.sum("bytes_in").alias("b")).collect()[0]
 dt = time.perf_counter() - t0
 print("RESULT " + json.dumps({{"cpus": cpus, "sec": dt, "docs": int(row["docs"]),

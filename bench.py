@@ -61,7 +61,6 @@ def main() -> None:
     pages_path, _ = ensure_pages(sf_dir)  # cached; generation NOT timed
 
     spark = build_session(cpus)
-    J.configure_session(spark)
 
     timings: dict[str, float] = {}
 
@@ -73,7 +72,7 @@ def main() -> None:
 
     def _extract_pass():
         t0 = time.perf_counter()
-        row = J.extract(todo, partitions=cpus * 4).agg(
+        row = J.extract(todo).agg(
             F.count(F.lit(1)).alias("docs"),
             F.sum(F.length("cleaned_text")).alias("chars_out"),
             F.sum("bytes_in").alias("bytes_in"),

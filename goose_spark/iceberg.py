@@ -20,56 +20,40 @@ anti-joining completed url ranges"):
   range inserts nothing, so a crash between the extracted write and the
   checkpoint commit is safe to re-run end-to-end.
 * metrics/checkpoint derive from the extracted write's own snapshot
-  (incremental read), mirroring job.py's batch-scoped listing.
+  (incremental read), mirroring job.py's batch-scoped re-read.
 """
 
 from __future__ import annotations
 
+from pyspark.sql.types import StructType
+
+from goose_spark.schema import CHECKPOINT, EXTRACTED, METRICS, PAGES
+
+
+def _ddl(table: str, schema: StructType, partitioned_by: str) -> str:
+    """CREATE TABLE for one job table, its column list rendered from the
+    normative StructType in goose_spark.schema (one source of truth)."""
+    cols = ",\n  ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        + ("" if f.nullable else " NOT NULL") for f in schema.fields)
+    return (f"\nCREATE TABLE IF NOT EXISTS {{catalog}}.{table} (\n  {cols}\n"
+            f") USING iceberg\n{partitioned_by}")
+
+
 DDL = {
-    "pages": """
-CREATE TABLE IF NOT EXISTS {catalog}.pages (
-  url      string NOT NULL,
-  warc_ts  timestamp,
-  html     binary,
-  text     string,
-  lang     string
-) USING iceberg
-PARTITIONED BY (days(warc_ts), bucket(1024, url))
-""",
-    "extracted": """
-CREATE TABLE IF NOT EXISTS {catalog}.extracted (
-  url string NOT NULL, warc_ts timestamp, lang string, title string,
-  cleaned_text string, meta_description string, meta_keywords string,
-  meta_lang string, canonical_link string, domain string,
-  tags array<string>, movies array<string>, publish_date string,
-  top_image string, authors array<string>, opengraph array<string>,
-  links array<string>, markdown string,
-  lang_fallback boolean, status string, err string,
-  bytes_in bigint, parse_ms double, partition_id int, bucket int
-) USING iceberg
-PARTITIONED BY (bucket)
-""",
-    "metrics": """
-CREATE TABLE IF NOT EXISTS {catalog}.metrics (
-  run_id string, partition_id int, bucket int, lang string,
-  docs_in bigint, ok bigint, parse_failures bigint,
-  empty_extractions bigint, decode_errors bigint, timeouts bigint,
-  lang_fallbacks bigint, bytes_processed bigint, wall_ms double,
-  started_ts timestamp
-) USING iceberg
-""",
-    "checkpoint": """
-CREATE TABLE IF NOT EXISTS {catalog}.checkpoint (
-  run_id string NOT NULL, url string NOT NULL, completed_ts timestamp
-) USING iceberg
-PARTITIONED BY (bucket(1024, url))
-""",
+    "pages": _ddl("pages", PAGES,
+                  "PARTITIONED BY (days(warc_ts), bucket(1024, url))\n"),
+    "extracted": _ddl("extracted", EXTRACTED, "PARTITIONED BY (bucket)\n"),
+    "metrics": _ddl("metrics", METRICS, ""),
+    "checkpoint": _ddl("checkpoint", CHECKPOINT,
+                       "PARTITIONED BY (bucket(1024, url))\n"),
 }
 
 # The B21 commit as Iceberg executes it: WHEN NOT MATCHED INSERT keyed on
 # (run_id, url). A retried/replayed commit of the same batch matches every
 # row and inserts nothing — the idempotence the local path approximates
-# with append + read-side distinct() (job.py resume_filter).
+# with append + a LEFT ANTI join that ignores duplicate checkpoint rows
+# (job.py resume_filter).
 CHECKPOINT_MERGE = """
 MERGE INTO {catalog}.checkpoint t
 USING (SELECT run_id, url, MAX(completed_ts) AS completed_ts
@@ -90,8 +74,8 @@ WHEN NOT MATCHED THEN
 # NOT EXISTS only guards against rows already in the TARGET; duplicate
 # (run_id, url) rows WITHIN one batch (task retries re-listing a url)
 # would all insert, so both statements pre-collapse the source with a
-# GROUP BY on the key — the same .distinct() the local path applies in
-# job.py resume_filter.
+# GROUP BY on the key — the same distinct() job.py run_job_df applies to
+# a batch's urls before its checkpoint append.
 CHECKPOINT_MERGE_PORTABLE = """
 INSERT INTO {checkpoint_table} (run_id, url, completed_ts)
 SELECT s.run_id, s.url, s.completed_ts

@@ -12,8 +12,8 @@ Scale design (the part that must hold at 10^12 documents / 1000 executors):
   Spark 4 pushes the projection down so the shuffle carries html only for
   surviving rows... html must ride the dedupe shuffle on a plain parquet
   scan; the cluster-scale fix is the bucketed-by-url layout, implemented
-  below (``write_pages_bucketed`` / ``dedupe_latest_bucketed``) and
-  plan-asserted shuffle-free. The anti-join's right side (checkpoint
+  below (``write_pages_bucketed``; ``dedupe_latest`` over it is
+  plan-asserted shuffle-free). The anti-join's right side (checkpoint
   urls) is small per run → broadcast.
 * **Salted repartition (B15).** ``repartition(P, pmod(xxhash64(url), P))``
   spreads documents uniformly; AQE rebalances by bytes but cannot split
@@ -26,18 +26,23 @@ Scale design (the part that must hold at 10^12 documents / 1000 executors):
 * **Exactly-once-ish resume (B21).** EXTRACTED is written before the
   checkpoint append; on restart the anti-join plus write-side idempotence
   make replays safe.
+* **Any filesystem.** Every path is read and written through Spark and
+  the path's Hadoop FileSystem, so out_dir may be a local path or any
+  Hadoop FS URI (``file://``, ``hdfs://``, ``s3a://``).
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from goose_spark.schema import EXTRACTED
-from goose_spark.udf import make_extract_batches
+from goose_spark.schema import CHECKPOINT, EXTRACTED, METRICS
+from goose_spark.udf import extract_batches
+from gooselite.config import DEFAULT_CONFIG, ExtractionConfig
 
 # Arrow batch caps (B16): ≤64 MB or ≤256 rows per batch, whichever first.
 ARROW_MAX_BYTES = str(64 * 1024 * 1024)
@@ -108,26 +113,9 @@ def write_pages_bucketed(pages: DataFrame, table: str,
     tests/test_plans.py::test_bucketed_dedupe_has_no_exchange). At 10^12
     rows this is the Iceberg `bucket(url, N)` partition transform
     (goose_spark/iceberg.py DDL); locally it is Spark's native bucketed
-    parquet via saveAsTable."""
+    parquet via saveAsTable; read it back with ``spark.table``."""
     (pages.write.mode("overwrite")
      .bucketBy(buckets, "url").sortBy("url").saveAsTable(table))
-
-
-def dedupe_latest_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """`dedupe_latest` over the bucketed layout — identical semantics,
-    shuffle-free plan."""
-    return dedupe_latest(spark.table(table))
-
-
-def resume_filter_bucketed(spark: SparkSession, pages_table: str,
-                           checkpoint_table: str) -> DataFrame:
-    """`resume_filter` at 10^12-row scale: when the checkpoint history
-    has grown past broadcast size, co-bucket BOTH sides by url (same
-    bucket count) and the LEFT ANTI join runs as a zero-exchange
-    SortMergeJoin — neither the fat pages side nor the full url history
-    ever shuffles (plan-asserted in tests/test_plans.py)."""
-    return spark.table(pages_table).join(
-        spark.table(checkpoint_table).select("url"), "url", "left_anti")
 
 
 def resume_filter(pages: DataFrame, checkpoint: DataFrame | None,
@@ -148,8 +136,10 @@ def resume_filter(pages: DataFrame, checkpoint: DataFrame | None,
     This stays a pure plan-builder — the size decision belongs to the
     caller, who can see the checkpoint's storage (run_job_df checks the
     on-disk bytes; no extra Spark action per resume). At 10^12-row
-    checkpoint scale use resume_filter_bucketed instead (co-bucketed
-    zero-exchange SMJ; no broadcast, no re-shuffle of the fat side)."""
+    checkpoint scale, co-bucket pages and checkpoint by url
+    (write_pages_bucketed) and pass broadcast=False: the anti-join is
+    then a zero-exchange SortMergeJoin — neither the fat pages side nor
+    the url history shuffles (plan-asserted in tests/test_plans.py)."""
     if checkpoint is None:
         return pages
     ckpt = checkpoint
@@ -186,13 +176,12 @@ def salted_repartition(df: DataFrame, partitions: int) -> DataFrame:
 
 
 def extract(pages: DataFrame, partitions: int | None = None,
-            doc_timeout_s: float | None = None, config=None,
+            config: ExtractionConfig = DEFAULT_CONFIG,
             presalted: bool = False) -> DataFrame:
     """The extraction operator (B17): prune columns, bucket, salt, then one
-    mapInPandas pass with gooselite. doc_timeout_s: per-doc wall budget
-    (None → GOOSE_DOC_TIMEOUT_S env, default 300s; 0 disables).
-    config: optional gooselite.config.ExtractionConfig (A21) riding the
-    UDF closure to every worker.
+    mapInPandas pass with gooselite. config: the
+    gooselite.config.ExtractionConfig (A21) riding the UDF closure to
+    every worker; its doc_timeout_s is the per-doc wall budget.
 
     presalted=True: the input already arrives spread by url hash — the
     url-bucketed table layout (write_pages_bucketed) IS the salt, since
@@ -221,7 +210,7 @@ def extract(pages: DataFrame, partitions: int | None = None,
     # the same Arrow batches (measured: ~2× worker-side slowdown from
     # allocator churn). A cheap in-partition hash sort interleaves sizes.
     shuffled = salted.sortWithinPartitions(F.xxhash64(F.col("url"), F.lit(1)))
-    return shuffled.mapInPandas(make_extract_batches(doc_timeout_s, config),
+    return shuffled.mapInPandas(partial(extract_batches, config=config),
                                 schema=EXTRACTED)
 
 
@@ -251,18 +240,8 @@ def metrics_from_extracted(extracted: DataFrame, run_id: str) -> DataFrame:
         )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("started_ts", F.current_timestamp())
-        .select("run_id", "partition_id", "bucket", "lang", "docs_in", "ok",
-                "parse_failures", "empty_extractions", "decode_errors",
-                "timeouts", "lang_fallbacks", "bytes_processed", "wall_ms",
-                "started_ts")
+        .select(*METRICS.fieldNames())
     )
-
-
-def run_job(spark: SparkSession, pages_path: str, out_dir: str, run_id: str,
-            partitions: int | None = None) -> dict:
-    """Full batch job over a Parquet pages path (see run_job_df)."""
-    return run_job_df(spark, read_pages(spark, pages_path), out_dir, run_id,
-                      partitions)
 
 
 def _url_bucket_count(spark: SparkSession, table: str) -> int | None:
@@ -326,39 +305,42 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
 
     Everything after the extraction derives from **this batch only**:
     the UDF runs exactly once (for the durable write), and metrics /
-    checkpoint / row count come from a column-pruned re-read of the
-    files THAT WRITE created (driver-side before/after listing — the
-    local stand-in for reading an Iceberg write's own snapshot). The job
-    never re-reads prior history, never caches the fat text columns
-    (persisting the full output was measured 4× slower than the bare
-    extraction — columnar cache compression of the article text), and a
-    resumed run is O(batch): each run's METRICS rows count only the
-    documents that run processed (per-run lineage, BASELINE.json:6).
+    checkpoint / row count come from a column-pruned Spark re-read of
+    the batch=<id> directory THAT WRITE created (the local stand-in for
+    reading an Iceberg write's own snapshot). The job never re-reads
+    prior history, never caches the fat text columns (persisting the
+    full output was measured 4× slower than the bare extraction —
+    columnar cache compression of the article text), and a resumed run
+    is O(batch): each run's METRICS rows count only the documents that
+    run processed (per-run lineage, BASELINE.json:6).
+
+    out_dir may be a local path or any Hadoop FS URI: the driver touches
+    storage only through Spark and the path's Hadoop FileSystem.
     """
-    configure_session(spark)
     extracted_path = os.path.join(out_dir, "extracted")
     metrics_path = os.path.join(out_dir, "metrics")
     ckpt_path = os.path.join(out_dir, "checkpoint")
 
     checkpoint = None
     broadcast_ckpt = True
-    if os.path.exists(ckpt_path):
+    sc = spark.sparkContext
+    ckpt_hpath = sc._jvm.org.apache.hadoop.fs.Path(ckpt_path)
+    fs = ckpt_hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    if fs.exists(ckpt_hpath):
         checkpoint = spark.read.parquet(ckpt_path)
         # Driver-side size guard (no Spark action): a checkpoint whose
         # parquet exceeds the cap would OOM the forced broadcast build
         # (urls compress ~3-5x on disk → ~512 MB of files is already a
         # multi-GB build side). Fall back to Catalyst/AQE choice; at
-        # 10^12-row history the answer is resume_filter_bucketed.
-        ckpt_bytes = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(ckpt_path) for f in files)
+        # 10^12-row history the answer is a url-bucketed checkpoint.
+        ckpt_bytes = fs.getContentSummary(ckpt_hpath).getLength()
         if ckpt_bytes > 512 * 1024 * 1024:
             import warnings
 
             warnings.warn(
                 f"run_job_df: checkpoint is {ckpt_bytes >> 20} MB on "
                 "disk; skipping the forced broadcast (consider the "
-                "url-bucketed layout + resume_filter_bucketed)",
+                "url-bucketed layout + resume_filter(..., broadcast=False))",
                 stacklevel=2)
             broadcast_ckpt = False
 
@@ -375,8 +357,8 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     # the writer's target-file-size + fanout handles this instead.
     #
     # Each batch writes under its own batch=<run_id>-<uuid> partition dir,
-    # so "this batch's files" is a listing of that subtree — never a
-    # global before/after diff. Concurrent runs (or a crash between the
+    # so "this batch's rows" is a read of that subtree — never a global
+    # before/after diff. Concurrent runs (or a crash between the
     # extracted append and the checkpoint append) cannot mis-attribute
     # another writer's files into this batch's metrics/checkpoint; the
     # batch id doubles as write-level lineage in the table layout (the
@@ -386,16 +368,12 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
     (extract(todo, partitions, presalted=presalted)
      .repartition(F.col("bucket"))
      .write.mode("append").partitionBy("bucket").parquet(batch_root))
-    new_files = sorted(_parquet_files(batch_root))
 
-    # This batch's rows, via the new files only — a column-pruned scan
-    # (the fat cleaned_text column is never read back); basePath keeps
-    # the bucket partition column.
-    batch = (
-        spark.read.option("basePath", extracted_path).parquet(*new_files)
-        .select("url", "lang", "status", "bytes_in", "parse_ms",
-                "partition_id", "bucket", "lang_fallback")
-    ) if new_files else spark.createDataFrame([], EXTRACTED).select(
+    # This batch's rows, read back with the declared schema (so an empty
+    # batch reads as 0 rows) and pruned to the lineage columns: the fat
+    # cleaned_text column is never read back. bucket comes from the
+    # bucket=<n> partition dirs.
+    batch = spark.read.schema(EXTRACTED).parquet(batch_root).select(
         "url", "lang", "status", "bytes_in", "parse_ms",
         "partition_id", "bucket", "lang_fallback")
 
@@ -408,24 +386,9 @@ def run_job_df(spark: SparkSession, pages: DataFrame, out_dir: str,
         batch.select("url").distinct()
         .withColumn("run_id", F.lit(run_id))
         .withColumn("completed_ts", F.current_timestamp())
-        .select("run_id", "url", "completed_ts")
+        .select(*CHECKPOINT.fieldNames())
         .write.mode("append").parquet(ckpt_path)
     )
     return {"batch_rows": n, "extracted_rows": n,
             "extracted_path": extracted_path,
             "metrics_path": metrics_path, "checkpoint_path": ckpt_path}
-
-
-def _parquet_files(root: str) -> set[str]:
-    """Data files under a parquet dir (driver-side metadata listing —
-    the local stand-in for an Iceberg snapshot's file manifest;
-    O(file count), touches no data). Callers pass a batch-scoped
-    batch=<id> subtree, so the listing is immune to concurrent writers
-    in the same table root; Iceberg's snapshot isolation is the cluster
-    equivalent."""
-    out: set[str] = set()
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                out.add(os.path.join(dirpath, f))
-    return out

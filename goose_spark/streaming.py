@@ -24,6 +24,7 @@ import hashlib
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,9 +66,49 @@ def _stream_dir(sf_dir: str) -> str:
                              ("events.parquet",))
 
 
-def stream_window_counts_append(spark: SparkSession, sf_dir: str,
-                                src_dir: str | None = None,
-                                max_files_per_trigger: int | None = None) -> DataFrame:
+def _events_stream(spark: SparkSession, sf_dir: str, src_dir: str | None = None,
+                   max_files_per_trigger: int | None = None) -> DataFrame:
+    """readStream over a staged events directory (default: the one-file
+    copy of sf_dir's events), with ts cast to TIMESTAMP (LTZ) — watermarks
+    need it, and the testdata ships TIMESTAMP_NTZ."""
+    reader = spark.readStream.schema(
+        spark.read.parquet(f"{sf_dir}/events.parquet").schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return (reader.parquet(src_dir or _stream_dir(sf_dir))
+            .withColumn("ts", F.col("ts").cast("timestamp")))
+
+
+@contextmanager
+def _utc(spark: SparkSession):
+    """Pin the session timezone to UTC for the enclosed query and restore
+    it after: only under UTC is the ntz→ltz cast + window + date cast
+    equal to the oracle's timezone-free date_trunc."""
+    tz_before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz_before)
+
+
+def _drain(df: DataFrame, mode: str) -> DataFrame:
+    """Run a streaming query to completion — trigger(availableNow) into a
+    memory sink in output `mode` — and return its result as a plain,
+    locally checkpointed DataFrame (the sink's temp view is dropped)."""
+    spark = df.sparkSession
+    sink = f"stream_{uuid.uuid4().hex[:8]}"
+    q = (df.writeStream.format("memory").queryName(sink)
+         .outputMode(mode).trigger(availableNow=True).start())
+    q.awaitTermination()
+    out = spark.table(sink).localCheckpoint()
+    spark.catalog.dropTempView(sink)
+    return out
+
+
+def q_stream_window_append(spark: SparkSession, sf_dir: str,
+                           src_dir: str | None = None,
+                           max_files_per_trigger: int | None = None) -> DataFrame:
     """readStream(events) → watermark → tumbling 1-day window × event_type
     → count/sum in append mode, drained via availableNow into a memory
     sink: each window is emitted ONCE, when the watermark passes
@@ -84,22 +125,12 @@ def stream_window_counts_append(spark: SparkSession, sf_dir: str,
     with maxFilesPerTrigger=1 forces multiple micro-batches so the
     watermark ratchets between them (the late-row drop pytest).
 
-    The session timezone is pinned to UTC for the duration of the query
-    (and restored after): watermarks need TIMESTAMP (LTZ), the testdata
-    ships TIMESTAMP_NTZ, and only under UTC is the ntz→ltz cast + window
-    + date cast equal to the oracle's timezone-free date_trunc.
+    Runs under a UTC session timezone (_utc).
     """
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        reader = spark.readStream.schema(batch_schema)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        src = (reader.parquet(src_dir or _stream_dir(sf_dir))
-               .withColumn("ts", F.col("ts").cast("timestamp")))
+    with _utc(spark):
         agg = (
-            src.withWatermark("ts", WATERMARK)
+            _events_stream(spark, sf_dir, src_dir, max_files_per_trigger)
+            .withWatermark("ts", WATERMARK)
             .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -110,21 +141,7 @@ def stream_window_counts_append(spark: SparkSession, sf_dir: str,
                 "event_type", "n_events", "sum_value",
             )
         )
-        sink = f"stream_win_app_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory").queryName(sink)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        out = spark.table(sink).localCheckpoint()
-        spark.catalog.dropTempView(sink)
-        return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-
-
-def q_stream_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stream_window_counts_append(spark, sf_dir)
+        return _drain(agg, "append")
 
 
 # Append mode emits exactly the finalized windows: end ≤ final watermark
@@ -148,7 +165,7 @@ SESSION_GAP = "30 minutes"
 _GAP_SECONDS = 1800
 
 
-def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user gap-based sessionization with the built-in
     ``session_window`` (dynamic, event-time, merges on overlap): a session
     extends while consecutive events are within SESSION_GAP; the window
@@ -157,54 +174,30 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade-off). Oracle: the classic gaps-and-islands rewrite — a session
     break is LAG(ts) more than SESSION_GAP behind — which DuckDB can run;
     this makes the streaming session operator fully hash-checkable.
+    Runs under a UTC session timezone (_utc).
     """
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        return _stream_session_counts_utc(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-
-
-def _stream_session_counts_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(batch_schema)
-        .parquet(_stream_dir(sf_dir))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        src.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # + 0.0 folds IEEE -0.0 from round() to +0.0 (oracle parity)
-            (F.round(F.sum("value"), 4) + F.lit(0.0)).alias("sum_value"),
+    with _utc(spark):
+        agg = (
+            _events_stream(spark, sf_dir)
+            .withWatermark("ts", WATERMARK)
+            .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                # + 0.0 folds IEEE -0.0 from round() to +0.0 (oracle parity)
+                (F.round(F.sum("value"), 4) + F.lit(0.0)).alias("sum_value"),
+            )
+            .select(
+                "user_id",
+                # fixed 6-digit microseconds: bare casts trim trailing
+                # zeros differently across engines
+                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+                .alias("session_start"),
+                F.date_format("w.end", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+                .alias("session_end"),
+                "n_events", "sum_value",
+            )
         )
-        .select(
-            "user_id",
-            # fixed 6-digit microseconds: bare casts trim trailing zeros
-            # differently across engines
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_end"),
-            "n_events", "sum_value",
-        )
-    )
-    sink = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return out
-
-
-def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stream_session_counts(spark, sf_dir)
+        return _drain(agg, "complete")
 
 
 # Gaps-and-islands twin: a session starts where the previous event of the
@@ -249,13 +242,7 @@ def q_stateful_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(batch_schema)
-        .parquet(_stream_dir(sf_dir))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .select("user_id", "value")
-    )
+    src = _events_stream(spark, sf_dir).select("user_id", "value")
 
     def update(key, pdfs, state: GroupState):
         n, vmax = state.get if state.exists else (0, float("-inf"))
@@ -272,16 +259,7 @@ def q_stateful_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful = src.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "append",
         GroupStateTimeout.NoTimeout)
-
-    sink = f"stream_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        stateful.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return out
+    return _drain(stateful, "append")
 
 
 # ---- streaming dedup (exactly-once-ish ingest) -----------------------------
@@ -302,17 +280,10 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark is evicted; the availableNow drain here processes the whole
     (finite) directory. Oracle: the duplicate delivery cancels out, so
     per-type counts over the plain events table."""
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        src = (
-            spark.readStream.schema(batch_schema)
-            .parquet(_stream_dir_doubled(sf_dir))
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
+    with _utc(spark):
         agg = (
-            src.withWatermark("ts", WATERMARK)
+            _events_stream(spark, sf_dir, _stream_dir_doubled(sf_dir))
+            .withWatermark("ts", WATERMARK)
             .dropDuplicates(["event_id"])
             .groupBy("event_type")
             .agg(
@@ -320,17 +291,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.round(F.sum("value"), 4) + F.lit(0.0)).alias("sum_value"),
             )
         )
-        sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory").queryName(sink)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        out = spark.table(sink).localCheckpoint()
-        spark.catalog.dropTempView(sink)
-        return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
+        return _drain(agg, "complete")
 
 
 ORACLE_STREAM_DEDUP = """
@@ -379,10 +340,4 @@ def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = src.mapInPandas(
         _extract_batches,
         schema="doc_id long, title string, text_norm string, status string")
-    sink = f"stream_extract_{uuid.uuid4().hex[:8]}"
-    q = (out.writeStream.format("memory").queryName(sink)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    res = spark.table(sink).localCheckpoint()
-    spark.catalog.dropTempView(sink)
-    return res
+    return _drain(out, "append")

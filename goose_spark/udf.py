@@ -9,102 +9,19 @@ module import — once per executor Python worker, not per batch.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pandas as pd
 
-from gooselite.pipeline import extract_one
+from goose_spark.schema import EXTRACTED
+from gooselite.config import DEFAULT_CONFIG, ExtractionConfig
+from gooselite.pipeline import ExtractionTimeout, extract_one, timeout_result
 
-# Per-document wall-clock budget (SURVEY.md §4.2): an adversarial or
-# pathological page must produce a status='timeout' row, not a pinned
-# task. 0 disables. SIGALRM-based — works in the Spark python worker's
-# main thread; silently disabled where signals are unavailable.
-DOC_TIMEOUT_S = float(os.environ.get("GOOSE_DOC_TIMEOUT_S", "300"))
-
-
-def _extract_with_timeout(html, lang, url, budget_s: float, config=None):
-    kw = {} if config is None else {"config": config}
-    if budget_s <= 0:
-        return extract_one(html, lang, url, **kw)
-    import signal
-
-    from gooselite.pipeline import ExtractionTimeout
-
-    def _on_alarm(signum, frame):
-        raise ExtractionTimeout()
-
-    try:
-        prev = signal.signal(signal.SIGALRM, _on_alarm)
-    except (ValueError, OSError, AttributeError):
-        return extract_one(html, lang, url, **kw)  # not main thread / platform
-    try:
-        signal.setitimer(signal.ITIMER_REAL, budget_s)
-        result = extract_one(html, lang, url, **kw)
-        # Disarm INSIDE the guarded region: if the alarm lands in the gap
-        # between extract_one returning and the timer being cleared, the
-        # ExtractionTimeout is still caught below instead of escaping the
-        # function and failing the whole Spark task. (A further window of
-        # 1-2 bytecodes remains at the top of the finally; extract_batches
-        # catches ExtractionTimeout at the call site to close it.)
-        signal.setitimer(signal.ITIMER_REAL, 0.0)
-        return result
-    except ExtractionTimeout:
-        return _timeout_result(html, lang, url, budget_s, config)
-    finally:
-        signal.setitimer(signal.ITIMER_REAL, 0.0)
-        signal.signal(signal.SIGALRM, prev)
-
-
-def _timeout_result(html, lang, url, budget_s: float, config=None):
-    from gooselite.pipeline import (
-        STATUS_TIMEOUT,
-        _empty_result,
-        _requested_lang_ok,
-    )
-    from gooselite.text import resolve_language
-
-    # Mirror extract_one's A21 semantics (pipeline.py:85): a forced
-    # target_language overrides the row lang, so a timed-out doc reports
-    # the same effective lang / lang_fallback as its non-timeout peers
-    # and METRICS lang grouping stays consistent under config.
-    primary = (config.target_language if config is not None
-               and config.target_language else lang)
-    return _empty_result(url, STATUS_TIMEOUT,
-                         f"exceeded {budget_s:.0f}s budget",
-                         len(html) if html else 0,
-                         resolve_language(primary), budget_s * 1000.0,
-                         lang_fallback=not _requested_lang_ok(primary))
-
-# column order must match goose_spark.schema.EXTRACTED
-_OUT_COLS = [
-    "url", "warc_ts", "lang", "title", "cleaned_text", "meta_description",
-    "meta_keywords", "meta_lang", "canonical_link", "domain", "tags",
-    "movies", "publish_date", "top_image", "authors", "opengraph", "links",
-    "markdown", "lang_fallback",
-    "status", "err", "bytes_in", "parse_ms", "partition_id", "bucket",
-]
-
-
-def make_extract_batches(doc_timeout_s: float | None = None, config=None):
-    """Build the mapInPandas body with an explicit per-doc budget and an
-    optional ExtractionConfig (A21). Both are captured in the closure so
-    they serialize to the workers (a module global patched on the driver
-    never reaches them). config.doc_timeout_s is used when doc_timeout_s
-    is not given explicitly."""
-    if doc_timeout_s is None and config is not None:
-        doc_timeout_s = config.doc_timeout_s
-    budget = DOC_TIMEOUT_S if doc_timeout_s is None else doc_timeout_s
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return extract_batches(it, budget, config)
-
-    return _batches
+_OUT_COLS = EXTRACTED.fieldNames()
 
 
 def extract_batches(it: Iterator[pd.DataFrame],
-                    doc_timeout_s: float | None = None,
-                    config=None) -> Iterator[pd.DataFrame]:
+                    config: ExtractionConfig = DEFAULT_CONFIG) -> Iterator[pd.DataFrame]:
     """mapInPandas body: (url, warc_ts, html, lang, bucket) → EXTRACTED.
 
     Input batches are Arrow record batches sized by
@@ -113,15 +30,35 @@ def extract_batches(it: Iterator[pd.DataFrame],
     batch never mixes 1 KB and 100 MB documents into an oversized
     allocation. partition_id comes from TaskContext for the per-partition
     lineage metrics (BASELINE.json:6).
+
+    config rides the closure to every worker (bind it with
+    functools.partial). Its doc_timeout_s is the per-document wall budget
+    (SURVEY.md §4.2): a pathological page becomes a status='timeout' row,
+    not a pinned task. It is SIGALRM-based, so it works in the Spark
+    python worker's main thread and is off where signals are unavailable.
     """
     import gc
+    import signal
 
     from pyspark import TaskContext  # import inside worker
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
-    budget = DOC_TIMEOUT_S if doc_timeout_s is None else doc_timeout_s
-    from gooselite.pipeline import ExtractionTimeout
+    budget = config.doc_timeout_s
+    # The handler raises only while a document is armed: an alarm landing
+    # after extract_one returned (or between batches) is a no-op instead
+    # of an exception that fails the whole Spark task.
+    armed = False
+
+    def _on_alarm(signum, frame):
+        if armed:
+            raise ExtractionTimeout()
+
+    if budget > 0:
+        try:
+            prev_handler = signal.signal(signal.SIGALRM, _on_alarm)
+        except (ValueError, OSError, AttributeError):
+            budget = 0  # not the main thread / no SIGALRM on this platform
 
     # Cyclic-GC policy: extract_one dispose()s each DOM so refcounting
     # reclaims the bulk; threshold-triggered collections during the
@@ -129,8 +66,8 @@ def extract_batches(it: Iterator[pd.DataFrame],
     # (~30% slowdown, worse under 32 concurrent workers). Disable the
     # collector and run one collect per batch for detached-subtree scraps.
     # Spark reuses Python workers across tasks (spark.python.worker.reuse),
-    # so the prior state MUST be restored on exit — including exceptional
-    # exit — or the collector stays off for every later task in the app.
+    # so the prior state — gc and the alarm handler — MUST be restored on
+    # exit, including exceptional exit, or it leaks into every later task.
     gc_was_enabled = gc.isenabled()
     gc.disable()
     try:
@@ -140,12 +77,14 @@ def extract_batches(it: Iterator[pd.DataFrame],
                 pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"], pdf["bucket"]
             ):
                 try:
-                    r = _extract_with_timeout(html, lang, url, budget, config)
-                except ExtractionTimeout:
-                    # alarm delivered in _extract_with_timeout's 1-2
-                    # bytecode disarm window — doc finished at the budget
-                    # boundary; record it as a timeout row, not a task kill
-                    r = _timeout_result(html, lang, url, budget, config)
+                    if budget > 0:
+                        signal.setitimer(signal.ITIMER_REAL, budget)
+                        armed = True
+                    r = extract_one(html, lang, url, config)
+                    armed = False
+                except ExtractionTimeout:  # the one-shot timer has fired
+                    armed = False
+                    r = timeout_result(html, lang, url, config)
                 r["warc_ts"] = warc_ts
                 r["partition_id"] = pid
                 r["bucket"] = int(bucket) if pd.notna(bucket) else 0
@@ -154,5 +93,8 @@ def extract_batches(it: Iterator[pd.DataFrame],
             gc.collect()
             yield out
     finally:
+        if budget > 0:
+            signal.setitimer(signal.ITIMER_REAL, 0.0)
+            signal.signal(signal.SIGALRM, prev_handler)
         if gc_was_enabled:
             gc.enable()

@@ -28,9 +28,10 @@ class ExtractionConfig:
     enable_markdown: additionally render the cleaned top node as
         markdown (gooselite.markdown; beyond-reference surface). OFF by
         default — the canonical flat-text bytes are never affected.
-    doc_timeout_s: per-document wall budget enforced by the Spark UDF
-        watchdog (not by extract_one itself); None → GOOSE_DOC_TIMEOUT_S
-        env default in goose_spark.udf.
+    doc_timeout_s: per-document wall budget in seconds, enforced by the
+        Spark UDF's SIGALRM watchdog (goose_spark.udf.extract_batches),
+        not by extract_one itself; a document past it becomes a
+        status='timeout' row. 0 disables it.
     """
 
     target_language: str | None = None
@@ -42,7 +43,7 @@ class ExtractionConfig:
     enable_opengraph: bool = True
     enable_links: bool = True
     enable_markdown: bool = False
-    doc_timeout_s: float | None = None
+    doc_timeout_s: float = 300.0
 
 
 DEFAULT_CONFIG = ExtractionConfig()

@@ -21,7 +21,9 @@ import json
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", required=True, help="pages table: parquet path, or Iceberg id with --iceberg")
-    ap.add_argument("--dst", required=True, help="output dir (extracted/ metrics/ checkpoint/)")
+    ap.add_argument("--dst", required=True,
+                    help="output root, a path or any Hadoop FS URI "
+                         "(extracted/ metrics/ checkpoint/)")
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--partitions", type=int, default=None,
                     help="UDF-stage partitions (default 4x defaultParallelism)")
@@ -38,18 +40,15 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName(f"goose-extract-{args.run_id}").getOrCreate()
-    J.configure_session(spark)
-    if args.iceberg:
-        if args.init_ddl:
-            from goose_spark.iceberg import ddl_sql
+    if args.iceberg and args.init_ddl:
+        from goose_spark.iceberg import ddl_sql
 
-            catalog = args.src.rsplit(".", 1)[0]  # db of the pages table
-            for stmt in ddl_sql(catalog):
-                spark.sql(stmt)
-        pages = spark.read.format("iceberg").load(args.src)
-        result = J.run_job_df(spark, pages, args.dst, args.run_id, args.partitions)
-    else:
-        result = J.run_job(spark, args.src, args.dst, args.run_id, args.partitions)
+        catalog = args.src.rsplit(".", 1)[0]  # db of the pages table
+        for stmt in ddl_sql(catalog):
+            spark.sql(stmt)
+    pages = (spark.read.format("iceberg").load(args.src) if args.iceberg
+             else J.read_pages(spark, args.src))
+    result = J.run_job_df(spark, pages, args.dst, args.run_id, args.partitions)
     print(json.dumps(result))
     spark.stop()
 

@@ -188,7 +188,7 @@ def test_bucketed_dedupe_has_no_exchange(spark, tmp_path):
 
     J.write_pages_bucketed(pages, "pages_bucketed_t", buckets=4)
     try:
-        out = J.dedupe_latest_bucketed(spark, "pages_bucketed_t")
+        out = J.dedupe_latest(spark.table("pages_bucketed_t"))
         tree = _plan(out).split("\n\n")[0]
         assert "Exchange" not in tree
         # identical semantics: same surviving (url, warc_ts) set
@@ -226,7 +226,8 @@ def test_bucketed_anti_join_has_no_exchange(spark):
      .bucketBy(4, "url").sortBy("url").saveAsTable("ckpt_aj_t"))
     try:
         with _no_broadcast(spark):
-            out = J.resume_filter_bucketed(spark, "pages_aj_t", "ckpt_aj_t")
+            out = J.resume_filter(spark.table("pages_aj_t"),
+                                  spark.table("ckpt_aj_t"), broadcast=False)
             tree = _plan(out).split("\n\n")[0]
             assert "Exchange" not in tree
             assert "SortMergeJoin LeftAnti" in tree

@@ -119,8 +119,9 @@ def test_resume_job_kill_and_rerun(spark, sf0001_fixtures, tmp_path_factory):
     half_path = os.path.join(out_dir, "pages_half")
     half.write.parquet(half_path)
 
-    r1 = J.run_job(spark, half_path, out_dir, run_id="r", partitions=4)
-    r2 = J.run_job(spark, pages_path, out_dir, run_id="r", partitions=4)
+    r1 = J.run_job_df(spark, J.read_pages(spark, half_path), out_dir,
+                      run_id="r", partitions=4)
+    r2 = J.run_job_df(spark, pages, out_dir, run_id="r", partitions=4)
     # batch_rows is per-run: the resume run extracts ONLY the missing urls
     n_total = J.prepare(pages).count()
     assert r1["batch_rows"] + r2["batch_rows"] == n_total
@@ -139,7 +140,7 @@ def test_resume_job_kill_and_rerun(spark, sf0001_fixtures, tmp_path_factory):
 
     resumed = spark.read.parquet(r2["extracted_path"]).select("url", "cleaned_text", "status")
     single_dir = str(tmp_path_factory.mktemp("single"))
-    J.run_job(spark, pages_path, single_dir, run_id="s", partitions=4)
+    J.run_job_df(spark, pages, single_dir, run_id="s", partitions=4)
     single = spark.read.parquet(os.path.join(single_dir, "extracted")).select(
         "url", "cleaned_text", "status")
     assert resumed.exceptAll(single).count() == 0
@@ -147,17 +148,70 @@ def test_resume_job_kill_and_rerun(spark, sf0001_fixtures, tmp_path_factory):
     shutil.rmtree(out_dir, ignore_errors=True)
 
 
+@pytest.fixture(scope="module")
+def file_uri_reruns(spark, sf0001_fixtures, tmp_path_factory):
+    """run_job_df twice on the same file:// out_dir (the form of any
+    hdfs:// or s3a:// root): the second run must find the first run's
+    checkpoint and extract nothing."""
+    pages_path, _ = sf0001_fixtures
+    root = tmp_path_factory.mktemp("file_uri")
+    sub_path = str(root / "pages")
+    (J.read_pages(spark, pages_path).filter(F.xxhash64("url") % 8 == 0)
+     .write.parquet(sub_path))
+    pages = J.read_pages(spark, sub_path)
+    n_urls = pages.select("url").distinct().count()
+    out = f"file://{root}/out"
+    r1 = J.run_job_df(spark, pages, out, run_id="f", partitions=4)
+    r2 = J.run_job_df(spark, pages, out, run_id="f", partitions=4)
+    yield r1, r2, n_urls
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def test_rerun_on_file_uri_extracts_nothing(spark, file_uri_reruns):
+    r1, r2, n_urls = file_uri_reruns
+    assert n_urls > 0
+    assert r1["batch_rows"] == n_urls
+    assert r2["batch_rows"] == 0
+    assert r1["extracted_path"].startswith("file://")
+    ext = spark.read.parquet(r2["extracted_path"])
+    assert ext.count() == n_urls
+    assert ext.select("url").distinct().count() == n_urls
+    docs = spark.read.parquet(r2["metrics_path"]).agg(
+        F.sum("docs_in")).collect()[0][0]
+    assert docs == n_urls
+    ck = spark.read.parquet(r2["checkpoint_path"])
+    assert ck.select("url").distinct().count() == n_urls
+
+
+def test_job_tables_match_schema(spark, file_uri_reruns):
+    """The METRICS and checkpoint files carry exactly the declared
+    column names and types of goose_spark.schema."""
+    from goose_spark.schema import CHECKPOINT, METRICS
+
+    _, r2, _ = file_uri_reruns
+    for path, schema in ((r2["metrics_path"], METRICS),
+                         (r2["checkpoint_path"], CHECKPOINT)):
+        got = spark.read.parquet(path).schema
+        assert ([(f.name, f.dataType) for f in got.fields]
+                == [(f.name, f.dataType) for f in schema.fields])
+
+
+_SLOW_HTML = (b"<html><body><div>"
+              + b"<p>Some of the words that we know are stopwords here.</p>" * 500
+              + b"</div></body></html>")
+
+
 def test_per_doc_timeout_yields_timeout_row(spark):
     """A document exceeding the per-doc budget becomes a status='timeout'
     row instead of a pinned task (SURVEY.md §4.2). The budget rides the
-    UDF closure, so it reaches the worker processes."""
-    html = (b"<html><body><div>"
-            + b"<p>Some of the words that we know are stopwords here.</p>" * 500
-            + b"</div></body></html>")
+    UDF closure in ExtractionConfig, so it reaches the worker processes."""
+    from gooselite.config import ExtractionConfig
+
     pages = spark.createDataFrame(
-        [("https://slow.example/a", None, bytearray(html), "en")],
+        [("https://slow.example/a", None, bytearray(_SLOW_HTML), "en")],
         schema="url string, warc_ts timestamp, html binary, lang string")
-    rows = J.extract(pages, partitions=2, doc_timeout_s=1e-4).collect()
+    rows = J.extract(pages, partitions=2,
+                     config=ExtractionConfig(doc_timeout_s=1e-4)).collect()
     assert len(rows) == 1
     assert rows[0].status == "timeout"
     assert rows[0].cleaned_text == ""
@@ -165,3 +219,40 @@ def test_per_doc_timeout_yields_timeout_row(spark):
     # and with the default budget the same page extracts fine
     ok = J.extract(pages, partitions=2).collect()
     assert ok[0].status == "ok"
+
+
+def test_extract_batches_timeout_restores_worker_state():
+    """Spark-free: a timed-out doc reports the lang / lang_fallback that
+    extract_one reports under the same config, and the SIGALRM handler
+    and gc state after the generator is exhausted equal those before."""
+    import gc
+    import signal
+
+    from goose_spark.udf import extract_batches
+    from gooselite.config import ExtractionConfig
+    from gooselite.pipeline import extract_one
+
+    cfg = ExtractionConfig(target_language="de", doc_timeout_s=1e-4)
+    url = "https://slow.example/b"
+    pdf = pd.DataFrame({"url": [url], "warc_ts": [None], "html": [_SLOW_HTML],
+                        "lang": ["en"], "bucket": [15]})
+
+    def sentinel(signum, frame):
+        pass
+
+    prev = signal.signal(signal.SIGALRM, sentinel)
+    try:
+        for gc_on in (True, False):
+            (gc.enable if gc_on else gc.disable)()
+            out = pd.concat(list(extract_batches(iter([pdf]), config=cfg)))
+            assert signal.getsignal(signal.SIGALRM) is sentinel
+            assert gc.isenabled() is gc_on
+            assert signal.getitimer(signal.ITIMER_REAL) == (0.0, 0.0)
+            row = out.iloc[0]
+            assert row.status == "timeout" and row.cleaned_text == ""
+            ref = extract_one(_SLOW_HTML, "en", url, cfg)
+            assert (row.lang, bool(row.lang_fallback)) == (
+                ref["lang"], ref["lang_fallback"]) == ("de", False)
+    finally:
+        gc.enable()
+        signal.signal(signal.SIGALRM, prev)

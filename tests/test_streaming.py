@@ -21,9 +21,9 @@ def _events_utc(spark):
 
 
 def test_stream_sessions_equal_batch_sessionization(spark):
-    from goose_spark.streaming import _GAP_SECONDS, stream_session_counts
+    from goose_spark.streaming import _GAP_SECONDS, q_stream_sessions
 
-    got = stream_session_counts(spark, SF)
+    got = q_stream_sessions(spark, SF)
 
     tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -98,7 +98,7 @@ def test_stream_window_append_drops_late_rows(spark, tmp_path_factory):
     accepts them — so the fixture targets an already-EMITTED window.)"""
     import os
     import pandas as pd
-    from goose_spark.streaming import stream_window_counts_append
+    from goose_spark.streaming import q_stream_window_append
 
     d = str(tmp_path_factory.mktemp("late_src"))
 
@@ -137,7 +137,7 @@ def test_stream_window_append_drops_late_rows(spark, tmp_path_factory):
     # dropped (accepting it would re-emit Jan 1 or corrupt its count)
     _write("d.parquet", [(7, "2025-01-01 04:00:00", 1, "view", 100.0, "{}")], t0 + 1800)
 
-    out = stream_window_counts_append(
+    out = q_stream_window_append(
         spark, SF, src_dir=d, max_files_per_trigger=1).toPandas()
     got = {str(r.day): (r.n_events, r.sum_value) for _, r in out.iterrows()}
     assert len(out) == 2                      # no dup emission of Jan 1
@@ -150,9 +150,9 @@ def test_stream_window_append_matches_finalized_oracle(spark):
     """q_stream_window_append over the real events table equals the batch
     per-day aggregate restricted to finalized windows (the oracle's WHERE
     clause) — and is a strict subset of the batch result over every day."""
-    from goose_spark.streaming import stream_window_counts_append
+    from goose_spark.streaming import q_stream_window_append
 
-    app = stream_window_counts_append(spark, SF)
+    app = q_stream_window_append(spark, SF)
     tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
